@@ -69,11 +69,10 @@ class Engine:
         num_trees: int = 100,
     ) -> float:
         from oxi_diel_db_spark.ml.comp_model import predict_log10_eps
-        from oxi_diel_db_spark.sources.materials import materials
 
         return predict_log10_eps(
             self.spark,
-            materials(self.spark),
+            self.spark.table("materials"),
             {"formula": composition},
             dielectric_type,
             model_type,

@@ -21,12 +21,16 @@ executable path; parity is statistical, SURVEY §5.2).
 
 from __future__ import annotations
 
+import math
 import os
+from typing import NamedTuple
 
+from pyspark.errors import ArithmeticException, NumberFormatException
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.feature import VectorAssembler
-from pyspark.ml.regression import RandomForestRegressor
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.ml.linalg import Vectors
+from pyspark.ml.regression import RandomForestRegressionModel, RandomForestRegressor
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oxi_diel_db_spark.functions import composition as C
@@ -44,24 +48,29 @@ MODELS_DIR = os.path.join(
 )
 
 
+def feature_columns(formula_col: str = "formula") -> dict[str, Column]:
+    """name → Column for every formula-only descriptor — the one place
+    the COMP_FEATURES are defined, shared by batch featurization and the
+    single-target scorer."""
+    en = C.electronegativity_stats(formula_col)
+    return {
+        "p0": C.stoichiometry_pnorm(formula_col, 0),
+        "p2": C.stoichiometry_pnorm(formula_col, 2),
+        "p3": C.stoichiometry_pnorm(formula_col, 3),
+        "p7": C.stoichiometry_pnorm(formula_col, 7),
+        "tm_frac": C.tmetal_fraction(formula_col),
+        "en_mean": en["en_mean"],
+        "en_min": en["en_min"],
+        "en_max": en["en_max"],
+        "en_range": en["en_range"],
+        "band_center": C.band_center(formula_col),
+        "total_atoms": C.total_atoms(formula_col),
+    }
+
+
 def comp_features(df: DataFrame, formula_col: str = "formula") -> DataFrame:
     """Formula-only descriptor columns (P3 'wide derived projection')."""
-    en = C.electronegativity_stats(formula_col)
-    return df.withColumns(
-        {
-            "p0": C.stoichiometry_pnorm(formula_col, 0),
-            "p2": C.stoichiometry_pnorm(formula_col, 2),
-            "p3": C.stoichiometry_pnorm(formula_col, 3),
-            "p7": C.stoichiometry_pnorm(formula_col, 7),
-            "tm_frac": C.tmetal_fraction(formula_col),
-            "en_mean": en["en_mean"],
-            "en_min": en["en_min"],
-            "en_max": en["en_max"],
-            "en_range": en["en_range"],
-            "band_center": C.band_center(formula_col),
-            "total_atoms": C.total_atoms(formula_col),
-        }
-    )
+    return df.withColumns(feature_columns(formula_col))
 
 
 def struct_features_from_corpus(materials: DataFrame) -> DataFrame:
@@ -92,27 +101,27 @@ def _labels(materials: DataFrame) -> DataFrame:
     )
 
 
-def train_model(
-    materials: DataFrame,
-    diel: str = "el",
-    des: str = "comp",
-    num_trees: int = 100,
-    seed: int = 42,
-) -> PipelineModel:
-    """Train one of the four reference model configs."""
-    label = f"label_{diel}"
-    if des == "comp":
-        base = _labels(materials)
-        features = COMP_FEATURES
-    elif des == "comp_st":
-        base = struct_features_from_corpus(materials)
-        features = COMP_FEATURES + STRUCT_FEATURES
-    else:
+def _features(des: str) -> list[str]:
+    if des not in ("comp", "comp_st"):
         raise ValueError(f"des must be 'comp' or 'comp_st', got {des!r}")
-    feats = scale_features_pop(comp_features(base), features).dropna(
-        subset=features + [label]
+    return COMP_FEATURES + (STRUCT_FEATURES if des == "comp_st" else [])
+
+
+def _featurized(materials: DataFrame, des: str) -> DataFrame:
+    """Unscaled training features plus both labels."""
+    base = _labels(materials) if des == "comp" else struct_features_from_corpus(materials)
+    return comp_features(base)
+
+
+def _training_frame(materials: DataFrame, diel: str, des: str) -> DataFrame:
+    features = _features(des)
+    return scale_features_pop(_featurized(materials, des), features).dropna(
+        subset=features + [f"label_{diel}"]
     )
-    pipe = Pipeline(
+
+
+def _pipeline(features: list[str], label: str, num_trees: int, seed: int) -> Pipeline:
+    return Pipeline(
         stages=[
             VectorAssembler(inputCols=features, outputCol="features"),
             RandomForestRegressor(
@@ -125,20 +134,85 @@ def train_model(
             ),
         ]
     )
-    return pipe.fit(feats)
+
+
+def train_model(
+    materials: DataFrame,
+    diel: str = "el",
+    des: str = "comp",
+    num_trees: int = 100,
+    seed: int = 42,
+) -> PipelineModel:
+    """Train one of the four reference model configs."""
+    feats = _training_frame(materials, diel, des)
+    return _pipeline(_features(des), f"label_{diel}", num_trees, seed).fit(feats)
 
 
 def _scaling_stats(materials: DataFrame, des: str) -> DataFrame:
     """The population-std scaler is fit on the TRAINING corpus; single
     predictions must reuse those stats (the reference persists its
     fitted StandardScalers, prediction_model/*_scaler.joblib)."""
-    features = COMP_FEATURES + (STRUCT_FEATURES if des == "comp_st" else [])
-    base = _labels(materials) if des == "comp" else struct_features_from_corpus(materials)
-    df = comp_features(base)
-    return df.agg(
+    features = _features(des)
+    return _featurized(materials, des).agg(
         *[F.avg(c).alias(f"{c}__mu") for c in features],
         *[F.stddev_pop(c).alias(f"{c}__sd") for c in features],
     )
+
+
+class _Scorer(NamedTuple):
+    """One config's single-target scorer: the forest and the scaled
+    feature Columns over a ``VALUES`` row holding the formula (and, for
+    comp_st, the structure doubles). Holds no prediction."""
+
+    stamp: tuple
+    rf: RandomForestRegressionModel
+    features: list[str]
+    columns: list[Column]
+
+
+#: (diel, des, num_trees) → scorer. An entry is rebuilt when its stamp —
+#: the SparkContext and the model directory's and scaler file's mtimes —
+#: no longer matches, so a restarted session or a rewritten artifact is
+#: never served from a stale model.
+_SCORERS: dict[tuple[str, str, int], _Scorer] = {}
+
+
+def _stamp(spark: SparkSession, diel: str, des: str, num_trees: int) -> tuple:
+    def mtime(path: str) -> int | None:
+        try:
+            return os.stat(path).st_mtime_ns
+        except OSError:
+            return None
+
+    return (
+        spark.sparkContext,
+        mtime(_model_path(diel, des, num_trees)),
+        mtime(_scaler_path(des)),
+    )
+
+
+def _scorer(
+    spark: SparkSession, materials: DataFrame, diel: str, des: str, num_trees: int
+) -> _Scorer:
+    key = (diel, des, num_trees)
+    stamp = _stamp(spark, *key)
+    hit = _SCORERS.get(key)
+    if hit is not None and hit.stamp == stamp:
+        return hit
+    model = load_or_train(spark, materials, diel, des, num_trees)
+    stats = _load_or_compute_scaler(spark, materials, des)
+    if None in stamp:  # an artifact was missing and has just been written
+        stamp = _stamp(spark, *key)
+    exprs = {**feature_columns(), **{c: F.col(c) for c in STRUCT_FEATURES}}
+    features = _features(des)
+    columns = []
+    for c in features:
+        mu, sd = stats[f"{c}__mu"], stats[f"{c}__sd"]
+        sd = sd if sd and sd > 0 else 1.0
+        columns.append(((exprs[c] - F.lit(mu)) / F.lit(sd)).alias(c))
+    scorer = _Scorer(stamp, model.stages[-1], features, columns)
+    _SCORERS[key] = scorer
+    return scorer
 
 
 def predict_log10_eps(
@@ -161,6 +235,14 @@ def predict_log10_eps(
     dielectric type — the reference's CLI advertises "electronic"/
     "ionic" but its library only accepts "el"/"ion" (main.py:11-12 vs
     ml_prediction.py:64-65); the engine accepts all four.
+
+    Served on the driver, like the reference's in-process joblib model:
+    the memoized scorer's feature Columns are evaluated over an inline
+    one-row ``VALUES`` relation (the optimizer folds it to a
+    LocalTableScan, so no Spark job runs) and the forest scores that
+    row with one JVM call. ``materials`` is read only when an artifact
+    has to be trained or the scaler computed. Batch scoring stays
+    ``model.transform``.
     """
     diel = {"electronic": "el", "ionic": "ion", "el": "el", "ion": "ion"}.get(
         dielectric_type
@@ -172,20 +254,33 @@ def predict_log10_eps(
     if model_type not in ("comp", "comp_st"):
         raise ValueError(f"model_type must be 'comp' or 'comp_st', got {model_type!r}")
 
-    model = load_or_train(spark, materials, diel, model_type, num_trees)
-    features = COMP_FEATURES + (STRUCT_FEATURES if model_type == "comp_st" else [])
+    scorer = _scorer(spark, materials, diel, model_type, num_trees)
+    formula = target["formula"]
+    args = {"formula": formula}
+    if model_type == "comp_st":
+        args.update({c: float(target[c]) for c in STRUCT_FEATURES})
+    markers = ", ".join(f":{name}" for name in args)
+    row_sql = f"SELECT * FROM VALUES ({markers}) AS t({', '.join(args)})"
+    try:
+        row = spark.sql(row_sql, args=args).select(*scorer.columns).collect()[0]
+    except (ArithmeticException, NumberFormatException) as e:
+        # ANSI mode raises where legacy mode yields null: 0/0 for an
+        # empty formula, a malformed count such as 'Si1.5.O2'
+        raise ValueError(f"cannot featurize formula {formula!r}: {e.getCondition()}") from e
+    bad = [c for c, v in zip(scorer.features, row) if v is None or math.isnan(v)]
+    if bad:
+        raise ValueError(
+            f"cannot score formula {formula!r}: null/NaN features {', '.join(bad)}"
+        )
+    return float(scorer.rf.predict(Vectors.dense(row)))
 
-    row = {"formula": target["formula"]}
-    for c in STRUCT_FEATURES:
-        if model_type == "comp_st":
-            row[c] = float(target[c])
-    tdf = comp_features(spark.createDataFrame([row]))
-    stats = _load_or_compute_scaler(spark, materials, model_type)
-    for c in features:
-        mu, sd = stats[f"{c}__mu"], stats[f"{c}__sd"]
-        sd = sd if sd and sd > 0 else 1.0
-        tdf = tdf.withColumn(c, (F.col(c) - F.lit(mu)) / F.lit(sd))
-    return float(model.transform(tdf).select("pred_log10").collect()[0][0])
+
+def _model_path(diel: str, des: str, num_trees: int) -> str:
+    return os.path.join(MODELS_DIR, f"{diel}_{des}_{num_trees}")
+
+
+def _scaler_path(des: str) -> str:
+    return os.path.join(MODELS_DIR, f"scaler_{des}.json")
 
 
 def _load_or_compute_scaler(spark: SparkSession, materials: DataFrame, des: str) -> dict:
@@ -195,7 +290,7 @@ def _load_or_compute_scaler(spark: SparkSession, materials: DataFrame, des: str)
     comp_st stats pass re-runs the pairwise site kernel otherwise)."""
     import json
 
-    path = os.path.join(MODELS_DIR, f"scaler_{des}.json")
+    path = _scaler_path(des)
     if os.path.exists(path):
         with open(path) as fr:
             return json.load(fr)
@@ -215,7 +310,7 @@ def load_or_train(
 ) -> PipelineModel:
     """Model artifact cache (S5: the reference ships fitted .joblib
     artifacts; the engine persists MLlib models under .scratch/models)."""
-    path = os.path.join(MODELS_DIR, f"{diel}_{des}_{num_trees}")
+    path = _model_path(diel, des, num_trees)
     if os.path.exists(path):
         try:
             return PipelineModel.load(path)
@@ -243,23 +338,10 @@ def evaluate(materials: DataFrame, diel: str = "el", des: str = "comp",
     corr/RMSE on the unseen 20% — the generalization check the
     reference never ran (its golden files are in-corpus predictions)."""
     label = f"label_{diel}"
-    base = _labels(materials) if des == "comp" else struct_features_from_corpus(materials)
-    features = COMP_FEATURES + (STRUCT_FEATURES if des == "comp_st" else [])
-    feats = scale_features_pop(comp_features(base), features).dropna(
-        subset=features + [label]
+    train_df, test_df = train_test_split(
+        _training_frame(materials, diel, des), "mp_id", 0.2, seed
     )
-    train_df, test_df = train_test_split(feats, "mp_id", 0.2, seed)
-    from pyspark.ml import Pipeline
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.regression import RandomForestRegressor
-
-    pipe = Pipeline(stages=[
-        VectorAssembler(inputCols=features, outputCol="features"),
-        RandomForestRegressor(featuresCol="features", labelCol=label,
-                              predictionCol="pred_log10",
-                              numTrees=num_trees, maxDepth=12, seed=seed),
-    ])
-    model = pipe.fit(train_df)
+    model = _pipeline(_features(des), label, num_trees, seed).fit(train_df)
     scored = model.transform(test_df)
     row = scored.agg(
         F.corr("pred_log10", label).alias("corr"),

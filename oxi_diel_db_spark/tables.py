@@ -65,17 +65,6 @@ def fanout(df: DataFrame, *keys: str) -> DataFrame:
     return df.repartition(n, *[F.col(k) for k in keys])
 
 
-#: Session-lifetime (path → byte size) memo for small_scan (r14 opt,
-#: r13 verdict Next #7): the registry runs 329 entries back-to-back and
-#: every fanout call re-statted the same immutable gate/fixture parquet
-#: files — O(files) driver syscalls per query build. Inputs that route
-#: through fanout/small_scan are immutable within a session (gate
-#: tables, fixture parquet written once to fresh uuid/tmp paths), so a
-#: plain path-keyed memo cannot go stale; per-batch streaming stores are
-#: read with spark.read directly and never pass through here.
-_FILE_SIZES: dict[str, int] = {}
-
-
 def small_scan(df: DataFrame) -> bool:
     """True iff every input file of ``df``'s scan is local AND the
     estimated split count (Spark's own formula: bytes /
@@ -86,7 +75,9 @@ def small_scan(df: DataFrame) -> bool:
     converting to an RDD forces a full physical-planning + Python-
     conversion pass (~1 s of DRIVER time per call, measured). Unknown
     layouts (non-local URIs, stat failures, empty file lists) return
-    False: never treat a possibly-big table as small.
+    False: never treat a possibly-big table as small. Sizes are statted
+    on every call, not memoized: a memo would need the same stat to
+    know it is fresh, and a file rewritten in place must be seen.
     """
     sc = df.sparkSession.sparkContext
     n = sc.defaultParallelism
@@ -102,13 +93,10 @@ def small_scan(df: DataFrame) -> bool:
         if not f.startswith("file:"):
             return False
         path = f[len("file://"):] if f.startswith("file://") else f[len("file:"):]
-        size = _FILE_SIZES.get(path)
-        if size is None:
-            try:
-                size = os.path.getsize(path)
-            except OSError:
-                return False
-            _FILE_SIZES[path] = size
+        try:
+            size = os.path.getsize(path)
+        except OSError:
+            return False
         est += max(1, size // max_bytes)
         if est >= n:
             return False

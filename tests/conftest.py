@@ -24,3 +24,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def mp4747_json(spark, tmp_path):
+    """mp-4747 as the reference corpus stores it, one JSON document per
+    record named ``<mp_id>.json`` — written from the committed
+    ``data/materials.parquet`` (ingested with the same schema), so the
+    tests need no copy of the reference repository."""
+    from pyspark.sql import functions as F
+
+    from oxi_diel_db_spark.sources.materials import materials
+
+    path = tmp_path / "mp-4747.json"
+    path.write_text(
+        materials(spark).filter(F.col("mp_id") == "mp-4747").toJSON().first()
+    )
+    return str(path)

@@ -26,7 +26,7 @@ def test_predict_accepts_both_spellings(spark, mats):
     b = CM.predict_log10_eps(
         spark, mats, {"formula": "SiO2"}, "electronic", "comp", num_trees=10
     )
-    assert a == b  # same cached model, same features
+    assert a == b  # one memoized scorer serves both spellings
 
 
 def test_predict_rejects_bad_types(spark, mats):
@@ -82,9 +82,9 @@ def test_cli_structure_features_poscar(tmp_path):
     assert abs(feats["mean_min_dist"] - math.sqrt(12)) < 1e-9  # (2,2,2) diag
 
 
-def test_cli_structure_features_json():
+def test_cli_structure_features_json(mp4747_json):
     class A:
-        structure = "/root/reference/oxi_diel_db/data/mp-4747.json"
+        structure = mp4747_json
 
     feats = cli._structure_features(A())
     assert set("".join(c for c in feats["formula"] if c.isalpha())) <= set("CaSnO")

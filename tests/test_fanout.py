@@ -62,18 +62,12 @@ def test_fanout_identity_when_splits_cover_cores(spark, tmp_path):
     assert tables.fanout(df, "id") is df
 
 
-def test_small_scan_predicate_and_memo(spark, tmp_path):
-    # r14: small_scan is fanout's decision predicate, exposed for other
-    # scale-adaptive choices (q108's TABLE-arg pruning), with a
-    # session-lifetime (path -> size) memo so back-to-back registry
-    # builds stop re-statting the same immutable files.
+def test_small_scan_predicate(spark, tmp_path):
+    # small_scan is fanout's decision predicate, exposed for other
+    # scale-adaptive choices (q108's TABLE-arg pruning).
     docs = tables.load(spark, "documents", SF_DIR)
     assert tables.small_scan(docs) is True
-    # memo now holds the gate file(s) and the cached decision agrees
-    for f in docs.inputFiles():
-        path = f[len("file://"):] if f.startswith("file://") else f[len("file:"):]
-        assert tables._FILE_SIZES.get(path) == os.path.getsize(path)
-    assert tables.small_scan(docs) is True  # memoized path, same answer
+    assert tables.small_scan(docs) is True  # repeat call, same answer
     # non-file-backed plan: never "small" (unknown must read as big)
     assert tables.small_scan(spark.range(5)) is False
     # enough splits to cover the cores: not small
@@ -81,8 +75,24 @@ def test_small_scan_predicate_and_memo(spark, tmp_path):
     p = os.path.join(str(tmp_path), "many2")
     spark.range(n * 4).repartition(n).write.parquet(p)
     assert tables.small_scan(spark.read.parquet(p)) is False
-    # fanout decisions are unchanged by the memo: identity at scale,
-    # active on the small scan (same asserts as the r13 tests above)
+    # fanout follows the predicate: identity at scale, active on the
+    # small scan (same asserts as the r13 tests above)
     big = spark.read.parquet(p)
     assert tables.fanout(big, "id") is big
     assert tables.fanout(docs, "doc_id") is not docs
+
+
+def test_small_scan_sees_file_rewritten_in_place(spark, tmp_path):
+    """A file rewritten at the same path with a different size changes
+    the decision: nothing may serve the size seen by an earlier call.
+    The rewrite extends the file sparsely past the split threshold, so
+    the test writes no real gigabytes; the DataFrame built before the
+    rewrite keeps its file listing, as a plan built earlier would."""
+    p = os.path.join(str(tmp_path), "one")
+    spark.range(10).coalesce(1).write.parquet(p)
+    df = spark.read.parquet(p)
+    assert tables.small_scan(df) is True
+    (f,) = [f for f in os.listdir(p) if f.endswith(".parquet")]
+    n = spark.sparkContext.defaultParallelism
+    os.truncate(os.path.join(p, f), n * (128 << 20))
+    assert tables.small_scan(df) is False

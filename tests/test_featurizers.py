@@ -145,7 +145,7 @@ def test_parse_formula_map(spark):
     assert row["ks"] == ["Ca", "Sn", "O"]
 
 
-def test_input_file_name_id_extraction(spark):
+def test_input_file_name_id_extraction(spark, mp4747_json):
     """F5: mp_id from the source filename (one file per record,
     reference data layout README.md:15)."""
     from oxi_diel_db_spark.sources.materials import MATERIALS_SCHEMA
@@ -153,7 +153,7 @@ def test_input_file_name_id_extraction(spark):
     df = (
         spark.read.schema(MATERIALS_SCHEMA)
         .option("multiLine", True)
-        .json("/root/reference/oxi_diel_db/data/mp-4747.json")
+        .json(mp4747_json)
         .select(
             "mp_id",
             F.regexp_extract(F.input_file_name(), r"(m[pv][c]?-\d+)\.json$", 1).alias(

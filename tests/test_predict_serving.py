@@ -1,0 +1,179 @@
+"""Single-target serving of ``predict_log10_eps``: the driver-side
+scorer must give the batch ``model.transform`` answer bit for bit in
+both ANSI modes, start no Spark job once warm, refuse formulas it
+cannot featurize, and reload when its session or artifacts change."""
+
+from __future__ import annotations
+
+import json
+import os
+import re
+import shutil
+import subprocess
+import sys
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
+
+from oxi_diel_db_spark.ml import comp_model as CM
+from oxi_diel_db_spark.sources import materials as M
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CONFIGS = [(diel, des) for diel in ("el", "ion") for des in ("comp", "comp_st")]
+TREES = 10
+
+
+@pytest.fixture(scope="module")
+def mats(spark):
+    return M.materials(spark)
+
+
+@pytest.fixture(scope="module")
+def targets(mats):
+    """20 corpus records with the structure features comp_st needs."""
+    rows = (
+        CM.struct_features_from_corpus(mats)
+        .select("mp_id", "formula", *CM.STRUCT_FEATURES)
+        .dropna()
+        .orderBy("mp_id")
+        .limit(20)
+        .collect()
+    )
+    return [r.asDict() for r in rows]
+
+
+@pytest.fixture(params=["false", "true"], ids=["ansi_off", "ansi_on"])
+def ansi(spark, request):
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", request.param)
+    yield request.param
+    spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def _batch(spark, mats, targets, des, model):
+    """The answer before single-target serving: ``comp_features`` plus
+    the persisted scaler, scored by ``model.transform`` in one job."""
+    features = CM.COMP_FEATURES + (CM.STRUCT_FEATURES if des == "comp_st" else [])
+    stats = CM._load_or_compute_scaler(spark, mats, des)
+    df = CM.comp_features(
+        spark.createDataFrame([{**t, "i": i} for i, t in enumerate(targets)])
+    )
+    for c in features:
+        mu, sd = stats[f"{c}__mu"], stats[f"{c}__sd"]
+        sd = sd if sd and sd > 0 else 1.0
+        df = df.withColumn(c, (F.col(c) - F.lit(mu)) / F.lit(sd))
+    return [p for _, p in sorted(model.transform(df).select("i", "pred_log10").collect())]
+
+
+@pytest.mark.parametrize("diel,des", CONFIGS)
+def test_served_value_bit_identical_to_batch_transform(spark, mats, targets, ansi, diel, des):
+    model = CM.load_or_train(spark, mats, diel, des, TREES)
+    expected = _batch(spark, mats, targets, des, model)
+    served = [CM.predict_log10_eps(spark, mats, t, diel, des, TREES) for t in targets]
+    assert served == expected
+
+
+def test_warm_call_starts_no_spark_job(spark, mats):
+    sc = spark.sparkContext
+    target = {"formula": "BaTiO3"}
+    CM.predict_log10_eps(spark, mats, target, "el", "comp", TREES)  # warm
+    group = f"serving-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "warm predict_log10_eps")
+    try:
+        CM.predict_log10_eps(spark, mats, target, "el", "comp", TREES)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        spark.range(3).collect()  # control: the group does see jobs
+        control = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert control
+
+
+@pytest.mark.parametrize("formula", ["Xx2O3", "", "sio2"])
+def test_unscorable_formula_raises_value_error(spark, mats, ansi, formula):
+    with pytest.raises(ValueError, match=f"formula {re.escape(repr(formula))}"):
+        CM.predict_log10_eps(spark, mats, {"formula": formula}, "el", "comp", TREES)
+
+
+def test_unscorable_formula_names_its_null_features(spark, mats):
+    with pytest.raises(ValueError, match="null/NaN features en_mean, band_center"):
+        CM.predict_log10_eps(spark, mats, {"formula": "Xx2O3"}, "el", "comp", TREES)
+
+
+def test_memo_reloads_rewritten_artifacts(spark, mats, monkeypatch, tmp_path):
+    monkeypatch.setattr(CM, "MODELS_DIR", str(tmp_path))
+    monkeypatch.setattr(CM, "_SCORERS", {})
+    key = ("el", "comp", 3)
+    target = {"formula": "SrTiO3"}
+
+    def served():
+        return CM.predict_log10_eps(spark, mats, target, *key)
+
+    v1 = served()  # trains and writes both artifacts
+    first = CM._SCORERS[key]
+    assert served() == v1 and CM._SCORERS[key] is first
+
+    # deleted and re-created by load_or_train: reloaded, same forest
+    shutil.rmtree(CM._model_path(*key))
+    CM.load_or_train(spark, mats, *key)
+    assert served() == v1
+    second = CM._SCORERS[key]
+    assert second is not first
+
+    # overwritten with another forest: the served answer follows it
+    other = CM.train_model(mats, "el", "comp", 3, seed=7)
+    other.write().overwrite().save(CM._model_path(*key))
+    v3 = served()
+    assert CM._SCORERS[key] is not second
+    assert v3 == _batch(spark, mats, [target], "comp", other)[0] != v1
+
+    # a rewritten scaler is picked up as well
+    path = CM._scaler_path("comp")
+    with open(path) as fr:
+        stats = json.load(fr)
+    stats["en_mean__mu"] += 0.5
+    with open(path, "w") as fw:
+        json.dump(stats, fw)
+    v4 = served()
+    assert v4 == _batch(spark, mats, [target], "comp", other)[0]
+    assert v4 != v3
+
+
+_RESTART = """
+import json
+from oxi_diel_db_spark.ml import comp_model as CM
+from oxi_diel_db_spark.session import get_spark
+from oxi_diel_db_spark.sources.materials import materials
+
+def predict():
+    spark = get_spark("serving-restart")
+    v = CM.predict_log10_eps(spark, materials(spark), {"formula": "BaTiO3"}, "el", "comp", 10)
+    return spark, v, CM._SCORERS[("el", "comp", 10)]
+
+spark, v1, s1 = predict()
+spark.stop()
+spark, v2, s2 = predict()
+spark.stop()
+print(json.dumps({"v1": v1, "v2": v2, "reloaded": s2 is not s1}))
+"""
+
+
+def test_restarted_session_reloads_and_predicts_the_same(spark, mats):
+    """Stop the session and start another in the same process (a child
+    process, so the suite's session stays up): the scorer is rebuilt
+    for the new SparkContext and answers exactly as before."""
+    expected = CM.predict_log10_eps(spark, mats, {"formula": "BaTiO3"}, "el", "comp", TREES)
+    env = {
+        **os.environ,
+        "PYTHONPATH": ROOT,
+        "SPARK_GRAFT_CPUS": "2",
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+    }
+    out = subprocess.run(
+        [sys.executable, "-c", _RESTART],
+        cwd=ROOT, env=env, capture_output=True, text=True, timeout=600, check=True,
+    )
+    result = json.loads(out.stdout.strip().splitlines()[-1])
+    assert result == {"v1": expected, "v2": expected, "reloaded": True}
