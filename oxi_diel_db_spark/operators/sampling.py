@@ -108,6 +108,26 @@ def _bucket_offsets(
     )
 
 
+def _join_within(
+    left: DataFrame, right: DataFrame, within: tuple[str, ...], keys: list[str]
+) -> DataFrame:
+    """``left.join(right, [*within, *keys])`` with the ``within`` group
+    columns matched null-safely: rows whose group is NULL join their own
+    group's aggregates like any other group instead of being dropped, as
+    a separate call over those rows would keep them. Columns come out in
+    the using-join order (keys, left's other columns, right's other
+    columns); without ``within`` it is the plain using-join."""
+    if not within:
+        return left.join(right, keys)
+    ren = {c: f"__r_{c}" for c in (*within, *keys)}
+    cond = [F.col(c).eqNullSafe(F.col(ren[c])) for c in within]
+    cond += [F.col(c) == F.col(ren[c]) for c in keys]
+    rest = [c for c in right.columns if c not in ren]
+    return left.join(right.withColumnsRenamed(ren), cond).select(
+        *within, *keys, *[c for c in left.columns if c not in ren], *rest
+    )
+
+
 def deterministic_shuffle(
     df: DataFrame, key: str, seed: int = 42, bucket_chars: int = 2
 ) -> DataFrame:
@@ -153,7 +173,8 @@ def pack_sequences(
     single plan (r14, for c7's per-split shard walks): every aggregate,
     window and join below is additionally keyed by the group columns,
     so each group's bin_ids equal a separate pack_sequences call over
-    that group — same math, one chain instead of N."""
+    that group — same math, one chain instead of N. A NULL group is a
+    group like any other (the joins match it null-safely)."""
     h = hash_hex8(key, seed)
     clamped = F.least(F.col(token_col).cast("bigint"), F.lit(budget))
     prepared = (
@@ -170,7 +191,7 @@ def pack_sequences(
         + F.col("__off")
     )
     return (
-        prepared.join(F.broadcast(off), [*within, "__b"])
+        _join_within(prepared, F.broadcast(off), within, ["__b"])
         .withColumn("bin_id", F.floor((cum - F.col("__ct")) / budget))
         .drop("__b", "__h", "__ct", "__off")
     )
@@ -264,7 +285,8 @@ def assign_shards(
     ``within`` columns run one INDEPENDENT shard walk per group in a
     single plan (r14, the pack_sequences counterpart): every aggregate,
     window and join below is additionally keyed by the group columns,
-    so per-group shard_ids equal separate assign_shards calls.
+    so per-group shard_ids equal separate assign_shards calls (a NULL
+    group included).
     """
     clamped = F.least(F.col(token_col).cast("bigint"), F.lit(budget))
     bins = packed.groupBy(*within, bin_col).agg(F.sum(clamped).alias("__bt"))
@@ -288,12 +310,12 @@ def assign_shards(
         + F.col("__off")
         + F.lit(token_offset).cast("bigint")
     )
-    shard_map = b.join(F.broadcast(off), [*within, "__bb"]).select(
+    shard_map = _join_within(b, F.broadcast(off), within, ["__bb"]).select(
         *within,
         bin_col,
         F.floor(cum_before / shard_budget).cast("bigint").alias("shard_id"),
     )
-    return packed.join(shard_map, [*within, bin_col])
+    return _join_within(packed, shard_map, within, [bin_col])
 
 
 def mix_corpora(

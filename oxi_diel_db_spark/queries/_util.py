@@ -25,14 +25,6 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return tables.load(spark, name, sf_dir)
 
 
-def fanout(df: DataFrame, *keys: str) -> DataFrame:
-    """Re-export of :func:`oxi_diel_db_spark.tables.fanout` (scan
-    parallelism floor for compute-dense inputs) for query modules."""
-    from oxi_diel_db_spark.tables import fanout as _fanout
-
-    return _fanout(df, *keys)
-
-
 def r6(col: Column, alias: str) -> Column:
     """ROUND(x, 6) + 0 — the +0 canonicalizes IEEE −0.0 to +0.0 (Spark's
     round already returns +0.0, DuckDB's keeps −0.0; the SQL twin adds

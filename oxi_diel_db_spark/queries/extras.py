@@ -14,8 +14,9 @@ from oxi_diel_db_spark.functions import composition as C
 from oxi_diel_db_spark.functions import text as TX
 from oxi_diel_db_spark.functions import formula as FM
 from oxi_diel_db_spark.queries import register
-from oxi_diel_db_spark.queries._util import fanout, r6, sql_sum_money, sum_money, t
+from oxi_diel_db_spark.queries._util import r6, sql_sum_money, sum_money, t
 from oxi_diel_db_spark.sources import materials as M
+from oxi_diel_db_spark.tables import fanout
 
 _MAT = f"read_parquet('{M.MATERIALS_PARQUET}/*.parquet')"
 
@@ -2723,8 +2724,6 @@ def ml17_features(spark, sf_dir):
     composite quality score). One tokenization, pure Catalyst — the
     feature scan is a single pass at any corpus scale."""
     from oxi_diel_db_spark.queries.llm_ops import t12_gopher_rules
-
-    from oxi_diel_db_spark.tables import fanout
 
     # fanout (r14 opt, ml16's pattern per the r13 verdict Next #5): the
     # word-split/regex feature chain below otherwise runs at scan

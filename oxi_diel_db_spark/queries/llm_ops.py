@@ -15,7 +15,8 @@ from pyspark.sql import functions as F
 from oxi_diel_db_spark.functions import text as TX
 from oxi_diel_db_spark.operators import dedup, similarity
 from oxi_diel_db_spark.queries import register
-from oxi_diel_db_spark.queries._util import fanout, r6, t
+from oxi_diel_db_spark.queries._util import r6, t
+from oxi_diel_db_spark.tables import fanout
 
 # Shared DuckDB CTEs for tokenized/shingled documents.
 _SQL_WORDS_CTE = f"""

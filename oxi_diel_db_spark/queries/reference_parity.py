@@ -46,6 +46,7 @@ from oxi_diel_db_spark.functions.element_data import (
 )
 from oxi_diel_db_spark.queries import register
 from oxi_diel_db_spark.sources import materials as M
+from oxi_diel_db_spark.tables import read_parquet
 
 
 def _r6n(col, alias):
@@ -302,7 +303,7 @@ def materialized_descriptors(spark):
     boundary (a real feature store write)."""
     if not _os.path.isdir(_DESC_PARQUET):
         el_comp_descriptors(spark).write.mode("overwrite").parquet(_DESC_PARQUET)
-    return spark.read.parquet(_DESC_PARQUET)
+    return read_parquet(spark, _DESC_PARQUET)
 
 
 def train_el_comp_reference(spark, num_trees: int = 60):
@@ -632,7 +633,7 @@ def materialized_ion_descriptors(spark):
         ion_comp_descriptors(spark).write.mode("overwrite").parquet(
             _ION_DESC_PARQUET
         )
-    return spark.read.parquet(_ION_DESC_PARQUET)
+    return read_parquet(spark, _ION_DESC_PARQUET)
 
 
 def train_ion_comp_reference(spark, num_trees: int = 60):
@@ -1160,7 +1161,7 @@ def materialized_el_st_descriptors(spark):
         el_comp_st_descriptors(spark).write.mode("overwrite").parquet(
             _ELST_DESC_PARQUET
         )
-    return spark.read.parquet(_ELST_DESC_PARQUET)
+    return read_parquet(spark, _ELST_DESC_PARQUET)
 
 
 def train_el_st_reference(spark, num_trees: int = 60):
@@ -1586,7 +1587,7 @@ def materialized_ion_st_descriptors(spark):
         ion_comp_st_descriptors(spark).write.mode("overwrite").parquet(
             _IONST_DESC_PARQUET
         )
-    return spark.read.parquet(_IONST_DESC_PARQUET)
+    return read_parquet(spark, _IONST_DESC_PARQUET)
 
 
 def train_ion_st_reference(spark, num_trees: int = 60):

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from oxi_diel_db_spark.queries import register
 from oxi_diel_db_spark.queries._util import t
 from oxi_diel_db_spark.streaming import ops
+from oxi_diel_db_spark.tables import read_parquet
 
 
 @register(
@@ -590,7 +591,7 @@ def st14_stream_decontamination(spark, sf_dir):
     job; the stream never shuffles."""
     from oxi_diel_db_spark.operators import dedup as _dedup
 
-    docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    docs_schema = read_parquet(spark, f"{sf_dir}/documents.parquet").schema
     stream = (
         spark.readStream.schema(docs_schema)
         .parquet(f"{sf_dir}/documents.parquet*")
@@ -892,7 +893,7 @@ def st20_stream_model_scoring(spark, sf_dir):
     # stream the documents table through the same feature expressions
     from oxi_diel_db_spark.functions import text as TX
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = read_parquet(spark, f"{sf_dir}/documents.parquet").schema
     stream = spark.readStream.schema(schema).parquet(
         f"{sf_dir}/documents.parquet*"
     )

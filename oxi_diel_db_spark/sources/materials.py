@@ -26,6 +26,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from oxi_diel_db_spark.tables import read_parquet
+
 REFERENCE_DATA_DIR = "/root/reference/oxi_diel_db/data"
 REFERENCE_PRED_DIR = "/root/reference/oxi_diel_db/prediction_model"
 REPO_DATA_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), "data")
@@ -182,8 +184,8 @@ def ingest_to_parquet(spark: SparkSession, out_dir: str = REPO_DATA_DIR) -> None
 
 
 def materials(spark: SparkSession) -> DataFrame:
-    return spark.read.parquet(MATERIALS_PARQUET)
+    return read_parquet(spark, MATERIALS_PARQUET)
 
 
 def predictions(spark: SparkSession) -> DataFrame:
-    return spark.read.parquet(PREDICTIONS_PARQUET)
+    return read_parquet(spark, PREDICTIONS_PARQUET)

@@ -35,9 +35,9 @@ def read_events_stream(
     FINAL watermark (st13: NULL-tier emission happens in the closing
     no-data batch either way), and it cuts the per-trigger fixed cost
     from O(files) to O(1)."""
-    from oxi_diel_db_spark.tables import normalize_event_ts
+    from oxi_diel_db_spark.tables import normalize_event_ts, read_parquet
 
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

@@ -1,16 +1,25 @@
 """Loaders for the driver's TPC-H-ish parquet tables (TESTDATA.md).
 
-All loads are plain ``spark.read.parquet`` — no schema inference cost
-(parquet is self-describing) and full predicate/column pushdown. At
-100 TB the same call works against a partitioned table root; nothing
-here assumes single-file layout.
+Every read of an engine input goes through :func:`read_parquet`. A plain
+``spark.read.parquet(path)`` infers the schema from the file footers on
+every call, and Spark runs that inference as a job (``ParquetUtils.
+inferSchema`` → ``mergeSchemasInParallel``, even with
+``mergeSchema=false``): one job and 70-100 ms for each load of a table
+that has not changed. :func:`read_parquet` infers once per *file stamp*
+and hands the schema back to Spark on later reads, so a warm read runs
+no job; the data, the file listing and the attribute ids are fresh on
+every read, and predicate/column pushdown is unchanged. At 100 TB the
+same call works against a partitioned table root; nothing here assumes
+single-file layout.
 """
 
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -103,10 +112,72 @@ def small_scan(df: DataFrame) -> bool:
     return True
 
 
+#: Session confs that change what parquet schema inference returns for
+#: the same files (nanos as long, NTZ timestamps, binary as string, INT96
+#: as timestamp, and which footers are merged).
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: path → (stamp, inferred schema); see read_parquet.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _stamp(spark: SparkSession, path: str) -> tuple | None:
+    """The SparkContext, ``(relative path, st_size, st_mtime_ns)`` of
+    every file at ``path``, and the session's inference confs; None for
+    a non-local URI or a path that cannot be statted (a glob, a missing
+    table), whose schema is never reused."""
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        return None
+    local = url.path if url.scheme else path
+    try:
+        if os.path.isdir(local):
+            files = []
+            for root, _, names in os.walk(local):
+                for n in names:
+                    st = os.stat(os.path.join(root, n))
+                    rel = os.path.relpath(os.path.join(root, n), local)
+                    files.append((rel, st.st_size, st.st_mtime_ns))
+            files.sort()
+        else:
+            st = os.stat(local)
+            files = [("", st.st_size, st.st_mtime_ns)]
+    except OSError:
+        return None
+    confs = tuple(spark.conf.get(k, None) for k in _INFER_CONFS)
+    return (spark.sparkContext, tuple(files), confs)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per
+    stamp (see :func:`_stamp`). A warm call returns
+    ``spark.read.schema(schema).parquet(path)``: Spark lists the files
+    again and builds a fresh relation, but reads no footer and runs no
+    job. A changed stamp re-infers — a restarted session, a file
+    rewritten in place, a part file added or removed, a flipped
+    inference conf. Non-local or unstattable paths are plain reads, the
+    same rule small_scan applies to unknown layouts."""
+    stamp = _stamp(spark, path)
+    if stamp is None:
+        return spark.read.parquet(path)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (stamp, df.schema)
+    return df
+
+
 def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_event_ts(df)
     return df

@@ -381,12 +381,13 @@ def test_within_grouped_walk_equals_per_group_calls(spark):
     """r14: pack_sequences/assign_shards with within=("grp",) must give
     each group EXACTLY what a separate per-group call gives — the c7
     release gate replaced its three per-split chains with one grouped
-    walk on the strength of this identity."""
+    walk on the strength of this identity. A NULL group is a group like
+    any other: its rows are kept and packed as a call over them alone."""
     import numpy as np
 
     rng = np.random.RandomState(7)
     rows = [
-        (int(i), int(rng.randint(10, 900)), ("a", "b", "c")[i % 3])
+        (int(i), int(rng.randint(10, 900)), ("a", "b", "c", None)[i % 4])
         for i in range(300)
     ]
     df = spark.createDataFrame(rows, "doc_id long, n_tok long, grp string")
@@ -407,8 +408,8 @@ def test_within_grouped_walk_equals_per_group_calls(spark):
         for r in grouped.collect()
     }
     assert len(got) == 300
-    for g in ("a", "b", "c"):
-        sub = df.filter(F.col("grp") == g).select("doc_id", "n_tok")
+    for g in ("a", "b", "c", None):
+        sub = df.filter(F.col("grp").eqNullSafe(F.lit(g))).select("doc_id", "n_tok")
         ref = sampling.assign_shards(
             sampling.pack_sequences(sub, "doc_id", "n_tok", budget=1000, seed=42),
             "n_tok",
