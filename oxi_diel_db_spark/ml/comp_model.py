@@ -26,15 +26,14 @@ import os
 from typing import NamedTuple
 
 from pyspark.errors import ArithmeticException, NumberFormatException
-from pyspark.ml import Pipeline, PipelineModel
-from pyspark.ml.feature import VectorAssembler
+from pyspark.ml import PipelineModel
 from pyspark.ml.linalg import Vectors
-from pyspark.ml.regression import RandomForestRegressionModel, RandomForestRegressor
+from pyspark.ml.regression import RandomForestRegressionModel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oxi_diel_db_spark.functions import composition as C
-from oxi_diel_db_spark.ml.pipeline import scale_features_pop
+from oxi_diel_db_spark.ml.pipeline import SCRATCH_DIR, load_or_fit, rf_pipeline, training_frame
 
 COMP_FEATURES = [
     "p0", "p2", "p3", "p7",
@@ -43,9 +42,7 @@ COMP_FEATURES = [
 ]
 STRUCT_FEATURES = ["vol_per_site", "density_proxy", "mean_min_dist", "std_min_dist"]
 
-MODELS_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch", "models"
-)
+MODELS_DIR = os.path.join(SCRATCH_DIR, "models")
 
 
 def feature_columns(formula_col: str = "formula") -> dict[str, Column]:
@@ -114,26 +111,7 @@ def _featurized(materials: DataFrame, des: str) -> DataFrame:
 
 
 def _training_frame(materials: DataFrame, diel: str, des: str) -> DataFrame:
-    features = _features(des)
-    return scale_features_pop(_featurized(materials, des), features).dropna(
-        subset=features + [f"label_{diel}"]
-    )
-
-
-def _pipeline(features: list[str], label: str, num_trees: int, seed: int) -> Pipeline:
-    return Pipeline(
-        stages=[
-            VectorAssembler(inputCols=features, outputCol="features"),
-            RandomForestRegressor(
-                featuresCol="features",
-                labelCol=label,
-                predictionCol="pred_log10",
-                numTrees=num_trees,
-                maxDepth=12,
-                seed=seed,
-            ),
-        ]
-    )
+    return training_frame(_featurized(materials, des), _features(des), f"label_{diel}")
 
 
 def train_model(
@@ -145,7 +123,7 @@ def train_model(
 ) -> PipelineModel:
     """Train one of the four reference model configs."""
     feats = _training_frame(materials, diel, des)
-    return _pipeline(_features(des), f"label_{diel}", num_trees, seed).fit(feats)
+    return rf_pipeline(_features(des), f"label_{diel}", num_trees, seed).fit(feats)
 
 
 def _scaling_stats(materials: DataFrame, des: str) -> DataFrame:
@@ -308,18 +286,12 @@ def load_or_train(
     des: str,
     num_trees: int = 100,
 ) -> PipelineModel:
-    """Model artifact cache (S5: the reference ships fitted .joblib
-    artifacts; the engine persists MLlib models under .scratch/models)."""
-    path = _model_path(diel, des, num_trees)
-    if os.path.exists(path):
-        try:
-            return PipelineModel.load(path)
-        except Exception:
-            pass  # stale/corrupt artifact → retrain
-    model = train_model(materials, diel, des, num_trees)
-    os.makedirs(MODELS_DIR, exist_ok=True)
-    model.write().overwrite().save(path)
-    return model
+    """The config's model artifact under .scratch/models (load_or_fit:
+    load, else train, save and return)."""
+    return load_or_fit(
+        _model_path(diel, des, num_trees),
+        lambda: train_model(materials, diel, des, num_trees),
+    )
 
 
 def train_test_split(df: DataFrame, key: str = "mp_id", test_rate: float = 0.2, seed: int = 42):
@@ -341,7 +313,7 @@ def evaluate(materials: DataFrame, diel: str = "el", des: str = "comp",
     train_df, test_df = train_test_split(
         _training_frame(materials, diel, des), "mp_id", 0.2, seed
     )
-    model = _pipeline(_features(des), label, num_trees, seed).fit(train_df)
+    model = rf_pipeline(_features(des), label, num_trees, seed).fit(train_df)
     scored = model.transform(test_df)
     row = scored.agg(
         F.corr("pred_log10", label).alias("corr"),

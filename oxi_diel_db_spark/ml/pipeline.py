@@ -15,11 +15,16 @@ Engine mapping:
   stddev_pop aggregates to reproduce the reference's semantics.
 * RandomForestRegressor (sklearn) → pyspark.ml RandomForestRegressor;
   batch scoring = model.transform (one pass, executor-parallel).
+
+Every model config — this module's in-corpus model, ml/comp_model's
+four and queries/reference_parity's four — runs the same lifecycle:
+training_frame → rf_pipeline → load_or_fit → score.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.feature import VectorAssembler
@@ -40,6 +45,19 @@ FEATURES = [
     "mean_site_z",
     "density_proxy",
 ]
+
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+#: Local artifact root (git-ignored): model caches, persisted descriptors.
+SCRATCH_DIR = os.path.join(_ROOT, ".scratch")
+
+# Committed pre-trained artifacts (S5 surface): the reference ships its
+# fitted models as .joblib blobs; the engine ships MLlib PipelineModel
+# directories under data/models so a fresh checkout scores without
+# paying RF training (regenerate with scripts/train_models.py after any
+# featurize()/hyperparameter change — the artifact pins FEATURES order).
+REPO_MODELS_DIR = os.path.join(_ROOT, "data", "models")
 
 
 def featurize(materials: DataFrame) -> DataFrame:
@@ -81,54 +99,60 @@ def scale_features_pop(df: DataFrame, cols: list[str]) -> DataFrame:
     return out.drop(*[f"{c}__mu" for c in cols], *[f"{c}__sd" for c in cols])
 
 
-def build_pipeline(label: str = "label_el", seed: int = 42) -> Pipeline:
-    assembler = VectorAssembler(inputCols=FEATURES, outputCol="features")
-    rf = RandomForestRegressor(
-        featuresCol="features",
-        labelCol=label,
-        predictionCol="pred_log10",
-        numTrees=100,
-        maxDepth=12,
-        seed=seed,
+def training_frame(df: DataFrame, features: list[str], label: str) -> DataFrame:
+    """The one training frame of every model config: features scaled
+    with population std, rows missing a feature or the label dropped."""
+    return scale_features_pop(df, features).dropna(subset=[*features, label])
+
+
+def rf_pipeline(features: list[str], label: str, num_trees: int, seed: int) -> Pipeline:
+    """VectorAssembler → seeded depth-12 RandomForestRegressor writing
+    ``pred_log10`` — the estimator of every model config."""
+    return Pipeline(
+        stages=[
+            VectorAssembler(inputCols=features, outputCol="features"),
+            RandomForestRegressor(
+                featuresCol="features",
+                labelCol=label,
+                predictionCol="pred_log10",
+                numTrees=num_trees,
+                maxDepth=12,
+                seed=seed,
+            ),
+        ]
     )
-    return Pipeline(stages=[assembler, rf])
+
+
+def load_or_fit(path: str, fit: Callable[[], PipelineModel]) -> PipelineModel:
+    """The one model-artifact policy (S5: the reference ships fitted
+    .joblib artifacts): load ``path``; when it is missing or does not
+    load (half-written, stale), call ``fit``, save the model over it and
+    return it. Delete the directory to retrain."""
+    if os.path.exists(path):
+        try:
+            return PipelineModel.load(path)
+        except Exception:
+            pass  # fall through to a fresh fit
+    model = fit()
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    model.write().overwrite().save(path)
+    return model
 
 
 def train(materials: DataFrame, which: str = "el", seed: int = 42) -> tuple[PipelineModel, DataFrame]:
     """Train one model config; returns (model, featurized df)."""
     label = f"label_{which}"
-    feats = scale_features_pop(featurize(materials), FEATURES).dropna(
-        subset=FEATURES + [label]
-    )
-    model = build_pipeline(label, seed).fit(feats)
-    return model, feats
-
-
-# Committed pre-trained artifacts (S5 surface): the reference ships its
-# fitted models as .joblib blobs; the engine ships MLlib PipelineModel
-# directories under data/models so a fresh checkout scores without
-# paying RF training (regenerate with scripts/train_models.py after any
-# featurize()/hyperparameter change — the artifact pins FEATURES order).
-REPO_MODELS_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(__file__))), "data", "models"
-)
+    feats = training_frame(featurize(materials), FEATURES, label)
+    return rf_pipeline(FEATURES, label, 100, seed).fit(feats), feats
 
 
 def load_or_train(materials: DataFrame, which: str = "el", seed: int = 42) -> tuple[PipelineModel, DataFrame]:
-    """train(), except a committed artifact short-circuits the RF fit.
-    Loading is metadata-read only (tree parquet), seconds not minutes;
-    a missing/corrupt artifact falls back to training transparently."""
+    """train(), except the committed artifact short-circuits the RF fit
+    (load_or_fit: loading is a metadata read, seconds not minutes)."""
     label = f"label_{which}"
-    feats = scale_features_pop(featurize(materials), FEATURES).dropna(
-        subset=FEATURES + [label]
-    )
+    feats = training_frame(featurize(materials), FEATURES, label)
     path = os.path.join(REPO_MODELS_DIR, f"rf_{which}_seed{seed}")
-    if os.path.isdir(path):
-        try:
-            return PipelineModel.load(path), feats
-        except Exception:
-            pass  # fall through to a fresh fit
-    model = build_pipeline(label, seed).fit(feats)
+    model = load_or_fit(path, lambda: rf_pipeline(FEATURES, label, 100, seed).fit(feats))
     return model, feats
 
 
@@ -161,18 +185,9 @@ def cross_validate(
     from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 
     label = f"label_{which}"
-    feats = scale_features_pop(featurize(materials), FEATURES).dropna(
-        subset=FEATURES + [label]
-    )
-    assembler = VectorAssembler(inputCols=FEATURES, outputCol="features")
-    rf = RandomForestRegressor(
-        featuresCol="features",
-        labelCol=label,
-        predictionCol="pred_log10",
-        numTrees=num_trees,
-        seed=seed,
-    )
-    pipe = Pipeline(stages=[assembler, rf])
+    feats = training_frame(featurize(materials), FEATURES, label)
+    pipe = rf_pipeline(FEATURES, label, num_trees, seed)
+    rf = pipe.getStages()[-1]  # the grid overrides its maxDepth
     grid = ParamGridBuilder().addGrid(rf.maxDepth, list(max_depths)).build()
     cv = CrossValidator(
         estimator=pipe,

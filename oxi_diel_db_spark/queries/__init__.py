@@ -79,156 +79,9 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# Round-7 sampling rotation (machine-computed: tools/rotation_plan.py
-# over CORRECTNESS_r01..r06). The driver's correctness gate samples the
-# FIRST 50 registry keys. Composition: (a) queries born/changed in r7,
-# (b) dq8 — the single official r6 failure, now fixed (array_join
-# projection), leading so the fix lands on the record, (c) the 23
-# never-officially-sampled residue (all locally hash-verified green in
-# two independent r6 sweeps), (d) 4 re-verifications whose behavior was
-# touched in r6 with values unchanged (t11 UDTF fold, q90 commit
-# protocol, m34 ANSI guard, st7 as_of read path), (e) 3 r7
-# behavior-touched re-verifications (st13 single-trigger replay, mm10
-# offset-walk decode, d15 df-window; q90's r7 sink-protocol change
-# rides its existing slot). 16 births + 3 regates + 23 residue + 7
-# re-verifications = 49 slots; the 1-slot tail stays on d1. After this round the cumulative official coverage closes the
-# ENTIRE pre-r7 registry — zero never-sampled residue for the first
-# time.
-#
-# Round-8 sampling rotation (machine-computed: tools/rotation_plan.py
-# over CORRECTNESS_r01..r07 → 65 never-sampled + 1 not-green of 305).
-# The 66 mandatory entries outnumber the 50 slots, so per the r7
-# verdict's rule the prefix orders by risk: (a) q14 leads — the r7
-# official failure (driver canonicalizer hashed Spark's BIGINT floor
-# vs DuckDB's DOUBLE floor differently; oracle now CASTs to BIGINT,
-# and check_oracle.py gained a numeric-family parity lint so the
-# class is structurally dead); (b) stateful/streaming gates
-# (st15–st20); (c) float-heavy statistics (dq10–dq16, ml14–ml22);
-# (d) the multimodal/similarity/graph/capstone/text/packing births;
-# (e) 8 of q100–q123, float/stateful shapes first (q100 UDAF, q101
-# recursion, q105 interpolation, q114/q115/q116 sketches, q119
-# dynamic sessions, q122 LOCF). The 16 deferred to r9 — q102, q103,
-# q104, q106, q107, q108, q109, q110, q111, q112, q113, q117, q118,
-# q120, q121, q123 — are pure SQL-surface shapes whose families
-# (windows, strings, set ops, arrow-batch plumbing) already hold
-# official rows, all locally hash-green in both ANSI modes.
-# Round-9 sampling rotation (machine-computed: tools/rotation_plan.py
-# --staleness over CORRECTNESS_r01..r08 → 16 never-sampled + 0
-# not-green of 305). Composition: (a) the four descriptor assemblies
-# ml6/ml8/ml10/ml12 lead — their staged-SQL rewrite landed in r8 AFTER
-# their driver-r7 certification, so their official rows predate the
-# code (r8 verdict "What's missing" #2); (b) the 16 never-sampled
-# SQL-surface entries (q102–q123 residue) — closes the registry: after
-# this round every entry has an official row; (c) 30 staleness
-# re-gates — the NEW rotation_plan.py --staleness report orders every
-# sampled entry by whether its newest official row predates the last
-# commit touching its registering module + imported operator files,
-# stalest first; these 30 are that report's head (r1-era joins.py rows
-# q39/q45–q50, then the r3-era extras/aggregates block m13–m28,
-# ml1–ml5, q15/q16). 4 + 16 + 30 = 50 slots.
-# Round-10 sampling rotation (machine-computed: tools/rotation_plan.py
-# --staleness over CORRECTNESS_r01..r09 → 8 never-sampled, 0 not-green
-# of 305 sampled). Composition per the r9 verdict: (a) the 8 r9 births
-# (st21/st22/d17/d18/d19/dq17/dq18/s10) — judge-verified green at
-# sf0.01 but never driver-sampled; (b) mm12 — its GATED VALUES changed
-# in r9 (pair-list → cluster output, llm_ops.py:4532) AFTER its r8
-# official row, so the record must be refreshed; (c) 41 staleness
-# re-gates from the --staleness report head — the r3-era
-# extras/aggregates/joins rows (q17–q38, q56, q69–q72), then the
-# r4-era dedup/graph/materials head (c1, d2–d9, g1–g3, m01, m02, mm1).
-# 9 + 41 = 50 slots. r11 planner note (the mm12 precedent — entries
-# changed/born AFTER this prefix was frozen): the MANDATORY head of
-# _R11_PRIORITY is m37_voronoi_tessellation, m38_op_fingerprint,
-# d20_substring_dedup, t23_bpe_apply (r10 births),
-# ml10_el_st_descriptors + ml12_ion_st_descriptors (slots swapped to
-# the exact kernels and gate population moved to the md5 sample),
-# s8_mmr_rerank (one half-tie row changed by the sim nudge) and
-# t18_bpe_merges (values unchanged, oracle added — re-gate cheap).
-# All verified hash-green locally in both ANSI modes (NOTES_r10).
-#
-# Round-11 sampling rotation (machine-computed: tools/rotation_plan.py
-# --staleness over CORRECTNESS_r01..r10 → 4 never-sampled + 2
-# not-green-latest of 317). Composition per the r10 verdict: (a) the
-# MANDATORY head exactly as the planted r11 planner note above — the 4
-# r10 births (m37, m38, d20, t23: never driver-sampled), the 2
-# exact-kernel slot swaps (ml10, ml12: their r9 official rows predate
-# the r10 staged-SQL→exact-Voronoi/OPSF swap), and the 2 gate upgrades
-# (s8: one half-tie row changed by the sim nudge; t18: oracle added,
-# latest official row says no_oracle); (b) 42 staleness re-gates from
-# the --staleness report head, stalest first — the r4-era llm_ops
-# block (mm3/mm4, p1–p8, q73, s1–s4, t1–t9), the r4-era streaming rows
-# (st1/st2/st3/st5/st8), then the r5-era dedup/quality/materials head
-# (c2, d10–d13, dq1–dq4, m06–m09, m29). 8 + 42 = 50 slots.
-# r12 planner note (the mm12 precedent — entries born/changed AFTER
-# this prefix was frozen): the MANDATORY head of _R12_PRIORITY is the
-# five r11 births d21_incremental_substring_dedup, t24_html_extract,
-# mm15_cdc_chunk_dedup, t25_url_canonicalize, c6_crawl_curation, plus
-# the two oracle upgrades ml16_isotonic_calibration (minimax closed
-# form) and mm11_spectrogram (naive-DFT replay) whose latest official
-# rows still say rows-only, and the late birth
-# st23_streaming_cdc_ingest (mm15's streaming face). The r11 fused-kernel rewire behind
-# ml10/ml12/m37/m38 needs NO carry — those four lead THIS round's
-# prefix, so their official rows already reflect the fused code. All
-# seven verified hash-green locally in both ANSI modes (NOTES_r11).
-# Round-12 sampling rotation (machine-computed: tools/rotation_plan.py
-# --staleness over CORRECTNESS_r01..r11 → 6 never-sampled + 2
-# not-green-latest of 323). Composition per the r11 verdict: (a) the
-# MANDATORY head exactly as the planted r12 planner note above — the
-# six r11 births (d21, t24, t25, mm15, c6, st23: never driver-sampled;
-# c6's gated values additionally changed THIS round when the funnel
-# grew a d22 blocklist stage, so its official row lands on the r12
-# code) and the two oracle upgrades (ml16 minimax closed form, mm11
-# naive-DFT replay: latest official rows still say no_oracle); (b) 42
-# staleness re-gates from the --staleness report head, stalest first —
-# the r5-era extras/llm_ops/relational/windows/joins rows (m30–m32,
-# mm2/mm5/mm7/mm8, p9/p11, q01–q43 block, q67/q68, q76–q89, st9/st10),
-# then the r6-era head (c3, d14, dq5–dq7, g4, mm6, mm9, p10).
-# 8 + 42 = 50 slots.
-# r13 planner note (the mm12 precedent — entries born/changed AFTER
-# this prefix froze): the MANDATORY head of _R13_PRIORITY is the four
-# r12 births p20_shard_export, d22_domain_blocklist,
-# p21_incremental_shard_export (llm_ops.py) and
-# dq19_split_leakage_audit (quality.py), never driver-sampled,
-# plus the two oracle upgrades q74_approx_percentiles
-# and q75_approx_ntile (GK exactness regime, aggregates.py — latest
-# official rows still say no_oracle from r8). c6's d22-extension and
-# st23's store-layout flag need NO carry: both lead THIS round's
-# prefix, so their official rows already reflect the r12 code. All
-# six verified hash-green locally in both ANSI modes (NOTES_r12).
-# Values-unchanged re-gate candidates if slots allow (the r7 class-d
-# precedent): m37/m38/ml10/ml12 — op_fingerprint.py gained a zero-site
-# guard + lazy own-projection in r12 (gated values unchanged: no
-# zero-site material exists; all four re-verified hash-green after the
-# change, judge-cheap to re-gate).
-# Round-13 sampling rotation (machine-computed: tools/rotation_plan.py
-# --staleness over CORRECTNESS_r01..r12 → 4 never-sampled + 2
-# not-green-latest of 323 sampled). Composition per the r12 verdict's
-# Next-round #1: (a) the MANDATORY head exactly as the planted r13
-# planner note above — the two oracle upgrades q74/q75 (GK exactness
-# regime; latest official rows still say no_oracle from r07) lead per
-# the not-green-first rule, then the four r12 births p20, d22, p21,
-# dq19 (never driver-sampled, judge-verified green both modes in r12);
-# (b) the r13 births c7_release_gate and d23_retroactive_decontam
-# (registered THIS round, before this prefix froze — the early-birth
-# variant of the mm12 precedent, so their official rows land on their
-# birth round); (c) the 4 values-unchanged re-gates m37/m38/ml10/ml12
-# (op_fingerprint.py zero-site guard landed r12 after their r11 rows);
-# (d) 38 staleness re-gates from the --staleness report head, stalest
-# first — the r6-era llm_ops/relational/windows/extras/streaming rows
-# (p5/p12/p14, q04, q52, q55, q57, q64, q82/q84, q91–q98 block,
-# s5–s7, st4/st6/st11/st12, t10/t12–t14), then the r7-era head
-# (d1/d15/d16, dq8/dq9, m33, ml7/ml9/ml11/ml13). 6 + 2 + 4 + 38
-# = 50 slots.
-# Round-14 sampling rotation. NEW STANDING RULE (r13 verdict Next #2):
-# the r13 rotation had ZERO overlap with r12's 50, so the driver's PERF
-# comparator produced n_common=0 and an empty per-query table — the
-# round-over-round diff starved itself. _SENTINELS is a FIXED set of 6
-# entries, one per major tier, re-sampled EVERY round at the head of
-# the prefix so consecutive CORRECTNESS files always intersect and
-# PERF's per-query comparison always has common rows. Every future
-# _R{N}_PRIORITY must start with _SENTINELS verbatim; the 6 slots are
-# the standing price of a working comparator. All 6 were sampled in
-# r13 (hash-green), so the r13→r14 diff is the first beneficiary.
+# The correctness gate behind __spark_entry__.py samples the first 50
+# registry keys, so _PRIORITY leads load_registry; _SENTINELS (one per
+# tier, sampled every time) lead it so consecutive samples overlap.
 _SENTINELS = [
     "d1_exact_dedup",  # dedup tier
     "t13_vocab_stats",  # text tier
@@ -238,19 +91,7 @@ _SENTINELS = [
     "st4_stream_dedup",  # streaming tier
 ]
 
-# Composition: (a) _SENTINELS head per the standing rule above;
-# (b) the 19 r14 behavior-touched paths — similarity seed-pass rework
-# (s3/s4/s7/s10 + the ivf consumers d16/d19/dq17/st21), the q108
-# scale-conditioned TABLE-arg prune, the c2 quality-branch anti-join
-# (+ its composers c1/p12/dq19 and d23's p20 ride), the c7 grouped
-# pack walk (+ pack/assign consumers p4/p5/p21), ml17's fanout+barrier
-# — all values-unchanged by construction, locally hash-verified in
-# both ANSI modes this round, re-gated here so the official record
-# reflects the r14 code; (c) 25 staleness re-gates from the
-# tools/rotation_plan.py --staleness head (r7/r8-era rows), stalest
-# first. 6 + 19 + 25 = 50 slots.
-_R14_PRIORITY = _SENTINELS + [
-    # --- (b) r14 behavior-touched re-gates ---
+_PRIORITY = _SENTINELS + [
     "q108_udtf_table_args",
     "s3_ann_ivf",
     "s4_pq_adc",
@@ -270,7 +111,6 @@ _R14_PRIORITY = _SENTINELS + [
     "p5_greedy_packing",
     "ml17_quality_classifier",
     "d23_retroactive_decontam",
-    # --- (c) staleness re-gates (r7/r8-era rows, stalest first) ---
     "mm10_video_neardup",
     "p13_curriculum_interleave",
     "p15_mixture_allocation",
@@ -296,586 +136,15 @@ _R14_PRIORITY = _SENTINELS + [
     "q99_observation_join",
     "st13_stream_left_outer_join",
     "st14_stream_decontamination",
-]
-
-_R13_PRIORITY = [
-    # --- (a) not-green-latest: oracle upgrades, official row says
-    # no_oracle from r07 ---
-    "q74_approx_percentiles",
-    "q75_approx_ntile",
-    # --- (a cont.) r12 births, never driver-sampled ---
-    "p20_shard_export",
-    "d22_domain_blocklist",
-    "p21_incremental_shard_export",
-    "dq19_split_leakage_audit",
-    # --- (b) r13 births (registered before the prefix froze) ---
-    "c7_release_gate",
-    "d23_retroactive_decontam",
-    # --- (c) values-unchanged re-gates (r12 zero-site guard) ---
-    "m37_voronoi_tessellation",
-    "m38_op_fingerprint",
-    "ml10_el_st_descriptors",
-    "ml12_ion_st_descriptors",
-    # --- (d) staleness re-gates, stalest first (r6-era rows) ---
-    "p12_leakage_safe_split",
-    "p14_length_matching",
-    "p5_greedy_packing",
-    "q04_case_buckets",
-    "q52_intersect_all",
-    "q55_event_transitions",
-    "q57_recursive_date_spine",
-    "q64_idle_rich_customers",
-    "q82_schema_evolution",
-    "q84_dpp_join",
-    "q91_lateral_topn",
-    "q92_collations",
-    "q93_prediction_stdout",
-    "q94_time_travel",
-    "q96_observed_metrics",
-    "q97_group_by_all",
-    "q98_try_arithmetic",
-    "s5_ann_recall",
-    "s6_filtered_ann",
-    "s7_ivf_filtered",
-    "st11_stream_dq_monitor",
-    "st12_compaction_cycles",
-    "st4_stream_dedup",
-    "st6_stateful_counts",
-    "t10_bigram_perplexity",
-    "t12_gopher_rules",
-    "t13_vocab_stats",
-    "t14_bm25_search",
-    # --- (d cont.) r7-era rows ---
-    "d15_tfidf_cosine_pairs",
-    "d16_semantic_dedup",
-    "d1_exact_dedup",
-    "dq8_snapshot_diff",
-    "dq9_schema_contract",
-    "m33_tensor_invariants",
-    "ml11_el_st_reference_scoring",
-    "ml13_ion_st_reference_scoring",
-    "ml7_reference_scoring",
-    "ml9_ion_reference_scoring",
-]
-
-_R12_PRIORITY = [
-    # --- (a) mandatory head: r11 births, never driver-sampled ---
-    "d21_incremental_substring_dedup",
-    "t24_html_extract",
-    "t25_url_canonicalize",
-    "mm15_cdc_chunk_dedup",
-    "c6_crawl_curation",
-    "st23_streaming_cdc_ingest",
-    # --- (a cont.) oracle upgrades: latest official row says no_oracle ---
-    "ml16_isotonic_calibration",
-    "mm11_spectrogram",
-    # --- (b) staleness re-gates, stalest first (r5-era rows) ---
-    "m30_voronoi_neighbors",
-    "m31_ewald_site_energy",
-    "m32_element_property_full",
-    "mm2_decode_features",
-    "mm5_resize_pipeline",
-    "mm7_modality_coverage",
-    "mm8_image_neardup",
-    "p11_temperature_sampling",
-    "p9_weighted_sample",
-    "q01_pricing_summary",
-    "q03_predicates",
-    "q06_topk",
-    "q08_intersect",
-    "q09_except",
-    "q12_json_extract",
-    "q40_ranking",
-    "q41_lag_lead",
-    "q42_running_frames",
-    "q43_range_frame",
-    "q67_top_supplier",
-    "q68_waiting_suppliers",
-    "q76_merge_upsert",
-    "q78_arrow_udf",
-    "q80_poscar_source",
-    "q81_dataset_profile",
-    "q83_bucketed_join",
-    "q85_session_window",
-    "q86_variant_json",
-    "q87_runtime_bloom_join",
-    "q88_ohlc_resample",
-    "q89_xml_source",
-    "st10_stream_upsert_sink",
-    "st9_late_data",
-    # --- (b cont.) r6-era rows ---
-    "c3_hybrid_search",
-    "d14_incremental_neardup",
-    "dq5_volume_anomaly",
-    "dq6_reconciliation",
-    "dq7_profile_drift",
-    "g4_bfs_distances",
-    "mm6_audio_features",
-    "mm9_audio_neardup",
-    "p10_length_buckets",
-]
-
-_R11_PRIORITY = [
-    # --- (a) mandatory head: r10 births, never driver-sampled ---
-    "m37_voronoi_tessellation",
-    "m38_op_fingerprint",
-    "d20_substring_dedup",
-    "t23_bpe_apply",
-    # --- (a cont.) behavior-rewritten after their official rows ---
-    "ml10_el_st_descriptors",
-    "ml12_ion_st_descriptors",
-    # --- (a cont.) gate upgrades: latest official row not hash-green ---
-    "s8_mmr_rerank",
-    "t18_bpe_merges",
-    # --- (b) staleness re-gates, stalest first (r4-era rows) ---
-    "mm3_frame_sampling",
-    "mm4_audio_chunks",
-    "p1_hash_sample",
-    "p2_stratified_sample",
-    "p3_deterministic_shuffle",
-    "p4_sequence_packing",
-    "p6_corpus_mixing",
-    "p7_capped_per_key",
-    "p8_three_way_split",
-    "q73_salted_join",
-    "s1_ann_brute_force",
-    "s2_ann_lsh",
-    "s3_ann_ivf",
-    "s4_pq_adc",
-    "st1_tumbling_window",
-    "st2_sliding_window",
-    "st3_session_window",
-    "st5_stream_static_join",
-    "st8_stream_stream_join",
-    "t1_lang_id",
-    "t2_quality_score",
-    "t3_token_count",
-    "t4_fingerprint",
-    "t5_tfidf_topterms",
-    "t6_redact_pii",
-    "t7_repetition_filters",
-    "t8_unigram_perplexity",
-    "t9_chunking",
-    # --- (b cont.) r5-era rows ---
-    "c2_corpus_ledger",
-    "d10_bloom_decontamination",
-    "d11_span_dedup",
-    "d12_containment_pairs",
-    "d13_neardup_curation",
-    "dq1_constraint_audit",
-    "dq2_distribution_drift",
-    "dq3_freshness_lag",
-    "dq4_k_anonymity",
-    "m06_screening",
-    "m07_join_predictions",
-    "m08_unscored_anti_join",
-    "m09_parse_formula",
-    "m29_atomic_orbitals",
-]
-
-_R10_PRIORITY = [
-    # --- (a) r9 births, never driver-sampled ---
-    "st21_streaming_ivf_upsert",
-    "st22_streaming_neardup_ingest",
-    "d17_dedup_quality_ngram",
-    "d18_dedup_quality_minhash",
-    "d19_semdedup_quality",
-    "dq17_embedding_drift",
-    "dq18_payload_integrity",
-    "s10_two_stage_retrieval",
-    # --- (b) behavior-rewritten after certification (r9 two-layer) ---
-    "mm12_phash_neardup",
-    # --- (c) staleness re-gates, stalest first (r3-era rows) ---
-    "q17_values_source",
-    "q18_partitioned_sink_roundtrip",
-    "q19_csv_roundtrip",
-    "q20_count_distinct",
-    "q21_approx_distinct",
-    "q22_rollup",
-    "q23_cube",
-    "q24_grouping_sets",
-    "q25_stat_aggs",
-    "q26_percentiles",
-    "q27_ordered_set_agg",
-    "q28_conditional_agg",
-    "q30_multiway_join",
-    "q31_left_join_agg",
-    "q32_full_outer",
-    "q33_semi_join",
-    "q34_anti_join",
-    "q35_range_join",
-    "q36_cross_join",
-    "q37_asof_join",
-    "q38_scalar_subquery",
-    "q56_time_rollup",
-    "q69_zorder_stats",
-    "q70_orc_roundtrip",
-    "q71_hll_mergeable",
-    "q72_gapfill_interpolate",
-    # --- (c cont.) r4-era rows ---
-    "c1_curation_pipeline",
-    "d2_ngram_jaccard",
-    "d3_minhash_lsh",
-    "d4_simhash",
-    "d5_embedding_neardup",
-    "d6_fuzzy_levenshtein",
-    "d7_dedup_keep_best",
-    "d8_dedup_clusters",
-    "d9_decontamination",
-    "g1_pagerank",
-    "g2_triangle_count",
-    "g3_label_propagation",
-    "m01_point_lookup",
-    "m02_eps_avg_invariant",
-    "mm1_binary_meta",
-]
-
-_R9_PRIORITY = [
-    # --- (a) behavior-rewritten after certification (r8 staged-SQL) ---
-    "ml6_reference_descriptors",
-    "ml8_ion_descriptors",
-    "ml10_el_st_descriptors",
-    "ml12_ion_st_descriptors",
-    # --- (b) never-sampled residue: registry closure ---
-    "q102_lateral_topk",
-    "q103_sql_functions",
-    "q104_parameterized_sql",
-    "q106_pipe_syntax",
-    "q107_session_variables",
-    "q108_udtf_table_args",
-    "q109_sql_scripting",
-    "q110_ordered_string_agg",
-    "q111_map_in_arrow",
-    "q112_apply_in_arrow",
-    "q113_transpose",
-    "q117_lateral_column_alias",
-    "q118_explode_outer",
-    "q120_regexp_family",
-    "q121_array_set_ops",
-    "q123_timestamp_units",
-    # --- (c) staleness re-gates, stalest first ---
-    "q39_correlated_in",
-    "q45_shipping_priority",
-    "q46_correlated_scalar",
-    "q47_merge_upsert",
-    "q48_scd2_intervals",
-    "q49_market_share",
-    "q50_returned_items",
-    "m13_stoichiometry",
-    "m14_tmetal_fraction",
-    "m15_element_property",
-    "m16_site_energy",
-    "m17_band_center",
-    "m18_min_rel_distances",
-    "m19_formula_udtf",
-    "m20_gaussian_symm",
-    "m21_density",
-    "m22_valence_orbital",
-    "m23_en_diff",
-    "m24_ion_property",
-    "m25_oxidation_balance",
-    "m26_local_property_diff",
-    "m27_packing_fraction",
-    "m28_site_order_params",
-    "ml1_rf_scoring",
-    "ml2_linear_regression",
-    "ml3_feature_importances",
-    "ml4_cross_validation",
-    "ml5_kmeans_embeddings",
-    "q15_pivot",
-    "q16_unpivot",
-]
-
-_R8_PRIORITY = [
-    # --- the r7 official failure, fixed (numeric-family interop) ---
-    "q14_math_funcs",
-    # --- stateful / streaming (never sampled) ---
-    "st15_state_store_reader",
-    "st16_python_stream_source",
-    "st17_rocksdb_window",
-    "st18_stream_full_outer_join",
-    "st19_dedup_within_watermark",
-    "st20_stream_model_scoring",
-    # --- float-heavy data-quality statistics ---
-    "dq10_ks_drift",
-    "dq11_row_quarantine",
-    "dq12_winsorize",
-    "dq13_benford_audit",
-    "dq14_functional_dependency",
-    "dq15_cusum_shift",
-    "dq16_ewma_control",
-    # --- ML tier (PCA/isotonic/classifier/FPGrowth/GLM/chi2/ALS/GBT) ---
-    "ml14_pca_covariance",
-    "ml15_pca_explained",
-    "ml16_isotonic_calibration",
-    "ml17_quality_classifier",
-    "ml18_frequent_itemsets",
-    "ml19_poisson_glm",
-    "ml20_chi_square",
-    "ml21_als_recommender",
-    "ml22_gbt_scoring",
-    # --- multimodal / similarity / graph / capstones ---
-    "mm11_spectrogram",
-    "mm12_phash_neardup",
-    "mm13_shot_boundaries",
-    "mm14_voice_activity",
-    "s8_mmr_rerank",
-    "s9_gemm_knn",
-    "g5_connected_components",
-    "g6_kcore",
-    "c4_multimodal_ledger",
-    "c5_corpus_health",
-    # --- text analysis ---
-    "t18_bpe_merges",
-    "t19_vocab_growth",
-    "t20_readability",
-    "t21_script_profile",
-    "t22_compression_ratio",
-    # --- sampling / packing ---
-    "p16_multimodal_packing",
-    "p17_preference_pairs",
-    "p18_epoch_shard_order",
-    "p19_embargo_split",
-    # --- q1xx: float/stateful shapes first ---
-    "q100_grouped_agg_udaf",
-    "q101_recursive_cte",
-    "q105_gapfill_interpolate",
-    "q114_approx_top_k",
-    "q115_count_min_sketch",
-    "q116_bitmap_distinct",
-    "q119_dynamic_session",
-    "q122_locf_impute",
-]
-
-# Round-7 rotation kept for the record (no longer drives ordering).
-# r8 planner note: the post-prefix r7 births — d16, st14, t16, p15,
-# t17, q100–q123, dq10–dq16, ml14–ml22, mm11–mm14, s8, s9, t18–t22,
-# g5, g6, p18, p19, c4, c5, st15–st20 — have no official row yet (all locally hash/parity
-# green in both modes, see NOTES_r7.md); they are the mandatory head
-# of the r8 prefix (they outnumber 50 slots, so the machine planner
-# must split them across r8/r9 — hash-gated entries before rows-only
-# ones), plus dq10 counts as behavior-touched (NULL-exclusion
-# contract added post-registration) and ml17 as behavior-touched
-# (closure-safe Catalyst scoring). tools/rotation_plan.py recomputes
-# the full list from CORRECTNESS_r01..r07 as usual.
-_R7_PRIORITY = [
-    # --- born/changed in round 7 ---
-    "ml6_reference_descriptors",
-    "ml7_reference_scoring",
-    "ml8_ion_descriptors",
-    "ml9_ion_reference_scoring",
-    "ml10_el_st_descriptors",
-    "ml11_el_st_reference_scoring",
-    "ml12_ion_st_descriptors",
-    "ml13_ion_st_reference_scoring",
-    "q99_observation_join",
-    "t15_keyword_extraction",
-    "dq9_schema_contract",
-    "st14_stream_decontamination",
-    "d16_semantic_dedup",
-    "t16_pii_scrub",
-    "p15_mixture_allocation",
-    "t17_perplexity_filter",
-    "q95_malformed_json",  # NULL-props contract fix (ADVICE r6) — regate
-    "p13_curriculum_interleave",  # null-source precondition assert — regate
-    "dq8_snapshot_diff",  # the r6 official failure, fixed this round
-    # --- the 23 never-officially-sampled residue ---
-    "q02_point_lookup",
-    "q05_global_sort",
-    "q07_union_all",
-    "q10_string_funcs",
-    "q11_datetime",
-    "q13_null_handling",
-    "q14_math_funcs",
-    "q53_except_all",
-    "q44_distribution",
-    "q54_funnel",
-    "q51_large_volume",
-    "q58_volume_shipping",
-    "q59_promo_revenue",
-    "q60_priority_late_ships",
-    "q61_custorder_distribution",
-    "q62_small_qty_revenue",
-    "q63_disjunctive_filter",
-    "q65_forecast_revenue",
-    "q66_priority_ship_class",
-    "q74_approx_percentiles",
-    "q75_approx_ntile",
-    "q79_jsonl_roundtrip",
-    "m33_tensor_invariants",
-    # --- r6 behavior-touched re-verifications ---
-    "t11_ngram_udtf",
-    "q90_python_sink",  # also r7-touched: job-scoped temps, rename-first commit
-    "m34_eigvals_closed_form",
-    "st7_incremental_rollup",
-    # --- r7 behavior-touched re-verifications (values unchanged) ---
-    "st13_stream_left_outer_join",  # single-trigger replay + 8 state partitions
-    "mm10_video_neardup",  # offset-walk PPM stream decode
-    "d15_tfidf_cosine_pairs",  # df via term-window, broadcast cliff removed
-]
-
-# Round-6 rotation kept for the record (no longer drives ordering).
-# (machine-computed in NOTES_r5 "r6 rotation
-# plan", then adjusted for round-6 births per its deferral rule): the
-# driver's correctness gate samples the FIRST 50 registry keys.
-# Cumulative official coverage across r1-r5 is 154 of 201; the prefix
-# carries the 23 queries born this round, the 3 whose gates upgraded
-# rows-only → full value-hash in r5 (st4/st6/p5), and 24 of the 47
-# never-sampled residue. The 17 deferred tail entries — q51/q58/q59/
-# q60/q62/q63/q65/q66 (J3/A8 family shapes keep q61/q64 plus the
-# r1-r3 join rows official), q44 (W: q40-q43 official), q79 (S9: q90
-# official), q54 (events: q55 kept), m33 (materials: m34 + six
-# invariants here), q02 (S2: m01 official), q07 (set ops: q52/q53
-# here + q08/q09 official), q10 (strings: q12/q14 covered), q13
-# (null handling: q04 keeps P4 + the null-robustness pytest matrix),
-# q11 (datetime: q88 OHLC official r5 + q56/q57 cover F9), q14
-# (math funcs: q12 official r5; F1/F2 also ride q93's pow/log gate,
-# in this prefix), q53 (multiset set ops: q52 stays in this prefix),
-# q05 (global sort: the O family keeps m12 here + q06 official r5,
-# and the GLOBAL_SORT lint guards the shape), q61 (J3: q64 here plus
-# the r1-r3 join rows) and the rows-only-BY-DESIGN q74/q75 — are the
-# ENTIRE r7 residue (23 entries); all locally hash-verified green.
-_R6_PRIORITY = [
-    # born in round 6 (locally hash-verified at sf0.01, st13 also at
-    # sf0.001) — take slots from the tail per NOTES_r5's deferral rule
-    "st12_compaction_cycles",
-    "st13_stream_left_outer_join",
-    "p13_curriculum_interleave",
-    "q92_collations",
-    "q93_prediction_stdout",
-    "q94_time_travel",
-    "dq8_snapshot_diff",
-    "t13_vocab_stats",
-    "q95_malformed_json",
-    "q96_observed_metrics",
-    "t14_bm25_search",
-    "p14_length_matching",
-    "c3_hybrid_search",
-    "mm10_video_neardup",
-    "q97_group_by_all",
-    "q98_try_arithmetic",
-    "m36_map_functions",
-    "d15_tfidf_cosine_pairs",
-    "g4_bfs_distances",
-    "dq7_profile_drift",
-    "t12_gopher_rules",
-    "q91_lateral_topn",
-    "mm9_audio_neardup",
-    # gates upgraded in r5 (rows-only → full value-hash) — need the
-    # upgraded gate on the official record
-    "st4_stream_dedup",
-    "st6_stateful_counts",
-    "p5_greedy_packing",
-    # never-driver-sampled: LLM-pipeline tail
-    "mm6_audio_features",
-    "p10_length_buckets",
-    "s5_ann_recall",
-    "t10_bigram_perplexity",
-    "d14_incremental_neardup",
-    "s6_filtered_ann",
-    "s7_ivf_filtered",
-    "p12_leakage_safe_split",
-    # materials invariants (rotated out of r5 to make room for leg-3)
-    "m03_lowest_freq_invariant",
-    "m04_born_trace_invariant",
-    "m05_counting_invariants",
-    "m10_tensor_eigvals",
-    "m11_site_explode_agg",
-    "m12_en_ordered_formula",
-    # relational tail
-    "q04_case_buckets",
-    "q52_intersect_all",
-    "q57_recursive_date_spine",
-    "q55_event_transitions",
-    # TPC-H-style tail
-    "q64_idle_rich_customers",
-    "q82_schema_evolution",
-    "q84_dpp_join",
-    "dq5_volume_anomaly",
-    "dq6_reconciliation",
-    "st11_stream_dq_monitor",
-]
-
-# Round-5 rotation kept for the record (no longer drives ordering).
-_R5_PRIORITY = [
-    # changed/new this round — need (re-)verification on the record
-    "mm2_decode_features",
-    "mm5_resize_pipeline",
-    "st9_late_data",
-    "q80_poscar_source",
-    "p9_weighted_sample",
-    "q78_arrow_udf",
-    # born in the round-5 continuation session (locally hash-verified
-    # at sf0.001 + sf0.01; these are brand-new operator families)
-    "d10_bloom_decontamination",
-    "d11_span_dedup",
-    "d12_containment_pairs",
-    "q83_bucketed_join",
-    "mm7_modality_coverage",
-    "m34_eigvals_closed_form",
-    "d13_neardup_curation",
-    "st10_stream_upsert_sink",
-    # born in the round-5 third leg (locally hash-verified at
-    # sf0.001 + sf0.01): the data-quality family, batch sessionization,
-    # VARIANT, runtime Bloom join, image content dedup
-    "dq1_constraint_audit",
-    "dq2_distribution_drift",
-    "dq3_freshness_lag",
-    "q85_session_window",
-    "q86_variant_json",
-    "q87_runtime_bloom_join",
-    "mm8_image_neardup",
-    # never-driver-sampled: relational core (incl. the flagship q01;
-    # q04/q05/q07/q10/q11/q13/q14 rotated to r6 to make room for the
-    # seven third-leg queries — q03/q06/q08/q09/q12 keep the family
-    # shapes on the record)
-    "q01_pricing_summary",
-    "q03_predicates",
-    "q06_topk",
-    "q08_intersect",
-    "q09_except",
-    "q12_json_extract",
-    # windows
-    "q40_ranking",
-    "q41_lag_lead",
-    "q42_running_frames",
-    "q43_range_frame",
-    # materials tail
-    # born after the first leg-3 rotation edit (m03/m04/m05/m11/m12
-    # rotate to r6; m06-m09 + m29-m32 keep the materials families)
-    "dq4_k_anonymity",
-    "q88_ohlc_resample",
-    "q89_xml_source",
-    "t11_ngram_udtf",
-    "p11_temperature_sampling",
-    "m06_screening",
-    "m07_join_predictions",
-    "m08_unscored_anti_join",
-    "m09_parse_formula",
-    "m29_atomic_orbitals",
-    "m30_voronoi_neighbors",
-    "m31_ewald_site_energy",
-    "m32_element_property_full",
-    # set-op/join/aggregate tail (q51-q55 and late q57 rotated to r6 —
-    # q08/q09 cover the set-op family shape, q40-q44 the events/window
-    # family; c2 is the end-to-end pipeline capstone and takes q57's
-    # slot)
-    "c2_corpus_ledger",
-    "q67_top_supplier",
-    "q68_waiting_suppliers",
-    "q81_dataset_profile",
-    "q90_python_sink",
-    "q76_merge_upsert",
 ]
 
 
 def load_registry() -> dict[str, QueryDef]:
     """Import every query module (side effect: fills REGISTRY), then
     reorder: the driver's correctness sweep samples a prefix of the
-    iteration order, so an explicit priority list leads (changed/new
-    queries + the never-driver-sampled set) and everything else keeps
-    its import order. Rotate the priority list each round until every
-    query has at least one official driver-checked row.
+    iteration order, so _PRIORITY leads (changed/new queries + the
+    least recently sampled set) and everything else keeps its
+    import order. tools/rotation_plan.py computes the next _PRIORITY.
     """
     from oxi_diel_db_spark.queries import (  # noqa: F401
         llm_ops,
@@ -892,7 +161,7 @@ def load_registry() -> dict[str, QueryDef]:
     )
 
     ordered: dict[str, QueryDef] = {}
-    for name in _R14_PRIORITY:
+    for name in _PRIORITY:
         if name in REGISTRY:  # tolerate renames; never KeyError the gate
             ordered[name] = REGISTRY[name]
     for name, qdef in REGISTRY.items():

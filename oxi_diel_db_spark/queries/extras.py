@@ -3157,9 +3157,7 @@ def ml22_gbt_scoring(spark, sf_dir):
     # nothing re-reads the corpus per stage). A featurization barrier
     # was tried and measured a wash (7.69 vs 7.67 interleaved A/B) —
     # fit-internal time dominates by algorithm; left as-is.
-    feats = P.scale_features_pop(
-        P.featurize(M.materials(spark)), P.FEATURES
-    ).dropna(subset=P.FEATURES + ["label_el"])
+    feats = P.training_frame(P.featurize(M.materials(spark)), P.FEATURES, "label_el")
     gbt = Pipeline(
         stages=[
             VectorAssembler(inputCols=P.FEATURES, outputCol="features"),
@@ -3174,6 +3172,4 @@ def ml22_gbt_scoring(spark, sf_dir):
             ),
         ]
     ).fit(feats)
-    return gbt.transform(feats).select(
-        "mp_id", F.round("pred_log10", 6).alias("pred_log10")
-    )
+    return P.score(gbt, feats)

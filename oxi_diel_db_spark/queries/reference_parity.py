@@ -35,6 +35,10 @@ corpus size, so the 100 TB posture is the same as m32's.
 
 from __future__ import annotations
 
+import os
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import functions as F
 
 from oxi_diel_db_spark.functions import atomic_orbitals as AO
@@ -284,65 +288,6 @@ def ml6_reference_descriptors(spark, sf_dir):
 # ml7: score the corpus on the exact descriptor set
 # ---------------------------------------------------------------------------
 
-import os as _os
-
-_SCRATCH = _os.path.join(
-    _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))),
-    ".scratch",
-)
-_DESC_PARQUET = _os.path.join(_SCRATCH, "ref_el_comp_descriptors.parquet")
-_MODEL_DIR = _os.path.join(_SCRATCH, "models", "ref_el_comp_rf60")
-
-
-def materialized_descriptors(spark):
-    """el_comp descriptors materialized to scratch parquet. The 34-col
-    descriptor plan is a single wide projection — fine to EXECUTE, but
-    iterative ML on top of it (RF's many passes + the scaler's
-    cross-join re-deriving it per pass) needs the lineage cut; at
-    cluster scale this is the standard persist-features-then-train
-    boundary (a real feature store write)."""
-    if not _os.path.isdir(_DESC_PARQUET):
-        el_comp_descriptors(spark).write.mode("overwrite").parquet(_DESC_PARQUET)
-    return read_parquet(spark, _DESC_PARQUET)
-
-
-def train_el_comp_reference(spark, num_trees: int = 60):
-    """RandomForest on the reference's exact el_comp descriptor
-    (scaled with population std, matching sklearn StandardScaler /
-    the reference's el_comp_scaler.joblib, ddof=0) → (model, feats).
-    Cached under .scratch/models like the other model artifacts (S5)."""
-    from pyspark.ml import Pipeline, PipelineModel
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.regression import RandomForestRegressor
-
-    from oxi_diel_db_spark.ml import comp_model as CM
-    from oxi_diel_db_spark.ml.pipeline import scale_features_pop
-
-    labels = CM._labels(M.materials(spark)).select("mp_id", "label_el")
-    feats = scale_features_pop(
-        materialized_descriptors(spark).join(labels, "mp_id"), EL_COMP_COLUMNS
-    ).dropna(subset=EL_COMP_COLUMNS + ["label_el"])
-    if _os.path.isdir(_MODEL_DIR):
-        return PipelineModel.load(_MODEL_DIR), feats
-    pipe = Pipeline(
-        stages=[
-            VectorAssembler(inputCols=EL_COMP_COLUMNS, outputCol="features"),
-            RandomForestRegressor(
-                featuresCol="features",
-                labelCol="label_el",
-                predictionCol="pred_log10",
-                numTrees=num_trees,
-                maxDepth=12,
-                seed=42,
-            ),
-        ]
-    )
-    model = pipe.fit(feats)
-    _os.makedirs(_os.path.dirname(_MODEL_DIR), exist_ok=True)
-    model.write().overwrite().save(_MODEL_DIR)
-    return model, feats
-
-
 @register("ml7_reference_scoring", oracle=None)  # ML internals — rows-only;
 # descriptor-level golden parity gated in tests/test_reference_parity.py
 def ml7_reference_scoring(spark, sf_dir):
@@ -352,10 +297,7 @@ def ml7_reference_scoring(spark, sf_dir):
     (prediction_result_el_comp.json) measured 0.995 at 60 trees —
     floor 0.98 asserted in tests/test_reference_parity.py (the
     reference's own corr to stored actuals is 0.986, BASELINE.md)."""
-    model, feats = train_el_comp_reference(spark)
-    return model.transform(feats).select(
-        "mp_id", F.round("pred_log10", 6).alias("pred_log10")
-    )
+    return _score_reference(spark, "el_comp")
 
 
 # ---------------------------------------------------------------------------
@@ -622,56 +564,6 @@ def ml8_ion_descriptors(spark, sf_dir):
 # ml9: score the corpus on the exact ion_comp descriptor set
 # ---------------------------------------------------------------------------
 
-_ION_DESC_PARQUET = _os.path.join(_SCRATCH, "ref_ion_comp_descriptors.parquet")
-_ION_MODEL_DIR = _os.path.join(_SCRATCH, "models", "ref_ion_comp_rf60")
-
-
-def materialized_ion_descriptors(spark):
-    """ion_comp descriptors materialized to scratch parquet (same
-    persist-features-then-train boundary as el_comp's)."""
-    if not _os.path.isdir(_ION_DESC_PARQUET):
-        ion_comp_descriptors(spark).write.mode("overwrite").parquet(
-            _ION_DESC_PARQUET
-        )
-    return read_parquet(spark, _ION_DESC_PARQUET)
-
-
-def train_ion_comp_reference(spark, num_trees: int = 60):
-    """RandomForest on the reference's exact ion_comp descriptor,
-    population-std scaled (the reference's StandardScaler, ddof=0)."""
-    from pyspark.ml import Pipeline, PipelineModel
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.regression import RandomForestRegressor
-
-    from oxi_diel_db_spark.ml import comp_model as CM
-    from oxi_diel_db_spark.ml.pipeline import scale_features_pop
-
-    labels = CM._labels(M.materials(spark)).select("mp_id", "label_ion")
-    feats = scale_features_pop(
-        materialized_ion_descriptors(spark).join(labels, "mp_id"),
-        ION_COMP_COLUMNS,
-    ).dropna(subset=ION_COMP_COLUMNS + ["label_ion"])
-    if _os.path.isdir(_ION_MODEL_DIR):
-        return PipelineModel.load(_ION_MODEL_DIR), feats
-    pipe = Pipeline(
-        stages=[
-            VectorAssembler(inputCols=ION_COMP_COLUMNS, outputCol="features"),
-            RandomForestRegressor(
-                featuresCol="features",
-                labelCol="label_ion",
-                predictionCol="pred_log10",
-                numTrees=num_trees,
-                maxDepth=12,
-                seed=42,
-            ),
-        ]
-    )
-    model = pipe.fit(feats)
-    _os.makedirs(_os.path.dirname(_ION_MODEL_DIR), exist_ok=True)
-    model.write().overwrite().save(_ION_MODEL_DIR)
-    return model, feats
-
-
 @register("ml9_ion_reference_scoring", oracle=None)  # ML internals —
 # rows-only; golden parity gated in tests/test_reference_parity.py
 def ml9_ion_reference_scoring(spark, sf_dir):
@@ -680,10 +572,7 @@ def ml9_ion_reference_scoring(spark, sf_dir):
     reference's own golden predictions (prediction_result_ion_comp
     .json) gated in tests/test_reference_parity.py, floor above the
     11-feature analog model's measured 0.928."""
-    model, feats = train_ion_comp_reference(spark)
-    return model.transform(feats).select(
-        "mp_id", F.round("pred_log10", 6).alias("pred_log10")
-    )
+    return _score_reference(spark, "ion_comp")
 
 
 # ---------------------------------------------------------------------------
@@ -1152,56 +1041,6 @@ def ml10_el_st_descriptors(spark, sf_dir):
 # ml11: score the corpus on the exact el_comp_st descriptor set
 # ---------------------------------------------------------------------------
 
-_ELST_DESC_PARQUET = _os.path.join(_SCRATCH, "ref_el_st_descriptors.parquet")
-_ELST_MODEL_DIR = _os.path.join(_SCRATCH, "models", "ref_el_st_rf60")
-
-
-def materialized_el_st_descriptors(spark):
-    if not _os.path.isdir(_ELST_DESC_PARQUET):
-        el_comp_st_descriptors(spark).write.mode("overwrite").parquet(
-            _ELST_DESC_PARQUET
-        )
-    return read_parquet(spark, _ELST_DESC_PARQUET)
-
-
-def train_el_st_reference(spark, num_trees: int = 60):
-    """RandomForest on the reference's el_comp_st descriptor (exact
-    compositional + declared-analog structural slots), pop-std scaled.
-    NULL structural slots (e.g. q4 in a sparse cell) drop the row,
-    matching the reference's NaN-row handling in training."""
-    from pyspark.ml import Pipeline, PipelineModel
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.regression import RandomForestRegressor
-
-    from oxi_diel_db_spark.ml import comp_model as CM
-    from oxi_diel_db_spark.ml.pipeline import scale_features_pop
-
-    labels = CM._labels(M.materials(spark)).select("mp_id", "label_el")
-    feats = scale_features_pop(
-        materialized_el_st_descriptors(spark).join(labels, "mp_id"),
-        EL_COMP_ST_COLUMNS,
-    ).dropna(subset=EL_COMP_ST_COLUMNS + ["label_el"])
-    if _os.path.isdir(_ELST_MODEL_DIR):
-        return PipelineModel.load(_ELST_MODEL_DIR), feats
-    pipe = Pipeline(
-        stages=[
-            VectorAssembler(inputCols=EL_COMP_ST_COLUMNS, outputCol="features"),
-            RandomForestRegressor(
-                featuresCol="features",
-                labelCol="label_el",
-                predictionCol="pred_log10",
-                numTrees=num_trees,
-                maxDepth=12,
-                seed=42,
-            ),
-        ]
-    )
-    model = pipe.fit(feats)
-    _os.makedirs(_os.path.dirname(_ELST_MODEL_DIR), exist_ok=True)
-    model.write().overwrite().save(_ELST_MODEL_DIR)
-    return model, feats
-
-
 @register("ml11_el_st_reference_scoring", oracle=None)  # ML internals —
 # rows-only; golden parity gated in tests/test_reference_parity.py
 def ml11_el_st_reference_scoring(spark, sf_dir):
@@ -1209,10 +1048,7 @@ def ml11_el_st_reference_scoring(spark, sf_dir):
     el_comp_st 29-dim descriptor (ml10); corr vs the reference's golden
     prediction_result_el_comp_st.json gated in
     tests/test_reference_parity.py."""
-    model, feats = train_el_st_reference(spark)
-    return model.transform(feats).select(
-        "mp_id", F.round("pred_log10", 6).alias("pred_log10")
-    )
+    return _score_reference(spark, "el_st")
 
 
 # ---------------------------------------------------------------------------
@@ -1578,52 +1414,6 @@ def ml12_ion_st_descriptors(spark, sf_dir):
 # ml13: score the corpus on the exact ion_comp_st descriptor set
 # ---------------------------------------------------------------------------
 
-_IONST_DESC_PARQUET = _os.path.join(_SCRATCH, "ref_ion_st_descriptors.parquet")
-_IONST_MODEL_DIR = _os.path.join(_SCRATCH, "models", "ref_ion_st_rf60")
-
-
-def materialized_ion_st_descriptors(spark):
-    if not _os.path.isdir(_IONST_DESC_PARQUET):
-        ion_comp_st_descriptors(spark).write.mode("overwrite").parquet(
-            _IONST_DESC_PARQUET
-        )
-    return read_parquet(spark, _IONST_DESC_PARQUET)
-
-
-def train_ion_st_reference(spark, num_trees: int = 60):
-    from pyspark.ml import Pipeline, PipelineModel
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.regression import RandomForestRegressor
-
-    from oxi_diel_db_spark.ml import comp_model as CM
-    from oxi_diel_db_spark.ml.pipeline import scale_features_pop
-
-    labels = CM._labels(M.materials(spark)).select("mp_id", "label_ion")
-    feats = scale_features_pop(
-        materialized_ion_st_descriptors(spark).join(labels, "mp_id"),
-        ION_COMP_ST_COLUMNS,
-    ).dropna(subset=ION_COMP_ST_COLUMNS + ["label_ion"])
-    if _os.path.isdir(_IONST_MODEL_DIR):
-        return PipelineModel.load(_IONST_MODEL_DIR), feats
-    pipe = Pipeline(
-        stages=[
-            VectorAssembler(inputCols=ION_COMP_ST_COLUMNS, outputCol="features"),
-            RandomForestRegressor(
-                featuresCol="features",
-                labelCol="label_ion",
-                predictionCol="pred_log10",
-                numTrees=num_trees,
-                maxDepth=12,
-                seed=42,
-            ),
-        ]
-    )
-    model = pipe.fit(feats)
-    _os.makedirs(_os.path.dirname(_IONST_MODEL_DIR), exist_ok=True)
-    model.write().overwrite().save(_IONST_MODEL_DIR)
-    return model, feats
-
-
 @register("ml13_ion_st_reference_scoring", oracle=None)  # ML internals —
 # rows-only; golden parity gated in tests/test_reference_parity.py
 def ml13_ion_st_reference_scoring(spark, sf_dir):
@@ -1632,7 +1422,68 @@ def ml13_ion_st_reference_scoring(spark, sf_dir):
     golden prediction_result_ion_comp_st.json gated in
     tests/test_reference_parity.py. With ml7/ml9/ml11 this completes
     reference-exact scoring for all four model configurations."""
-    model, feats = train_ion_st_reference(spark)
-    return model.transform(feats).select(
-        "mp_id", F.round("pred_log10", 6).alias("pred_log10")
+    return _score_reference(spark, "ion_st")
+
+
+# ---------------------------------------------------------------------------
+# ml7/ml9/ml11/ml13: the reference's four model configs, each a random
+# forest over its exact descriptor
+# ---------------------------------------------------------------------------
+
+
+class RefConfig(NamedTuple):
+    descriptors: Callable  # spark → (mp_id, formula, <columns>)
+    columns: list[str]
+    label: str
+
+
+#: key → model config (ml_prediction.py:69-276). Artifacts:
+#: .scratch/ref_{key}_descriptors.parquet and .scratch/models/ref_{key}_rf60.
+REFERENCE_CONFIGS: dict[str, RefConfig] = {
+    "el_comp": RefConfig(el_comp_descriptors, EL_COMP_COLUMNS, "label_el"),
+    "ion_comp": RefConfig(ion_comp_descriptors, ION_COMP_COLUMNS, "label_ion"),
+    "el_st": RefConfig(el_comp_st_descriptors, EL_COMP_ST_COLUMNS, "label_el"),
+    "ion_st": RefConfig(ion_comp_st_descriptors, ION_COMP_ST_COLUMNS, "label_ion"),
+}
+
+
+def materialized(spark, key: str):
+    """The config's descriptors, persisted to scratch parquet. Each
+    descriptor plan is one wide projection — fine to EXECUTE, but RF's
+    many passes (and the scaler's cross-join re-deriving it per pass)
+    need the lineage cut; at cluster scale this is the standard
+    persist-features-then-train boundary (a real feature-store write).
+    A directory without Spark's ``_SUCCESS`` marker — an interrupted
+    write — is rebuilt, not read."""
+    from oxi_diel_db_spark.ml.pipeline import SCRATCH_DIR
+
+    path = os.path.join(SCRATCH_DIR, f"ref_{key}_descriptors.parquet")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        REFERENCE_CONFIGS[key].descriptors(spark).write.mode("overwrite").parquet(path)
+    return read_parquet(spark, path)
+
+
+def train_reference(spark, key: str):
+    """RandomForest (60 trees, depth 12, seed 42) on the config's
+    descriptor, population-std scaled like the reference's
+    StandardScaler (ddof=0) → (model, feats). Rows with a NULL slot
+    (e.g. q4 in a sparse cell) drop, matching the reference's NaN-row
+    handling in training. The model is cached like every other model
+    artifact (ml/pipeline.load_or_fit)."""
+    from oxi_diel_db_spark.ml import comp_model as CM
+    from oxi_diel_db_spark.ml import pipeline as P
+
+    _, cols, label = REFERENCE_CONFIGS[key]
+    labels = CM._labels(M.materials(spark)).select("mp_id", label)
+    feats = P.training_frame(materialized(spark, key).join(labels, "mp_id"), cols, label)
+    model = P.load_or_fit(
+        os.path.join(P.SCRATCH_DIR, "models", f"ref_{key}_rf60"),
+        lambda: P.rf_pipeline(cols, label, 60, 42).fit(feats),
     )
+    return model, feats
+
+
+def _score_reference(spark, key: str):
+    from oxi_diel_db_spark.ml.pipeline import score
+
+    return score(*train_reference(spark, key))

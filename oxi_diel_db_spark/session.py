@@ -37,10 +37,11 @@ _BASE_CONF = {
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
     "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "10GB",
     "spark.sql.ansi.enabled": "false",
-    # events.parquet stores TIMESTAMP(NANOS). Spark 4.1+ reads it natively
-    # as TIMESTAMP_NTZ (this legacy flag is ignored there); older readers
-    # need it to read nanos as long. Either way tables.normalize_event_ts
-    # converts to a plain TIMESTAMP column.
+    # Every shipped events.parquet stores TIMESTAMP(MICROS,
+    # isAdjustedToUTC=false), which Spark reads as TIMESTAMP_NTZ. This
+    # flag serves a TIMESTAMP(NANOS) file: with it the column reads as
+    # long nanos; without it Spark rejects the column. Either way
+    # tables.normalize_event_ts converts to a plain TIMESTAMP column.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.ui.enabled": "false",
 }

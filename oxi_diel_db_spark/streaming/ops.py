@@ -25,8 +25,10 @@ def read_events_stream(
 
     The trailing ``*`` makes the path a glob so the file source treats
     the parent dir as basePath (it rejects a bare file path); ts arrives
-    as long nanos (see session nanosAsLong) and is normalized to a real
-    timestamp column before any event-time operator sees it.
+    as TIMESTAMP_NTZ (the shipped files store not-UTC-adjusted micros) or,
+    from a TIMESTAMP(NANOS) file, as long nanos (session nanosAsLong), and
+    is normalized to a real timestamp column before any event-time
+    operator sees it.
 
     ``max_files_per_trigger``: 1 (default) replays file-per-micro-batch
     — the multi-trigger cadence the windowed/stateful gates exercise.

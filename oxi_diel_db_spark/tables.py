@@ -184,18 +184,18 @@ def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFr
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
-    """events.ts is TIMESTAMP(NANOS) in parquet; normalize whatever the
-    installed Spark surfaces to a plain TIMESTAMP (LTZ) column so every
+    """Normalize events.ts to a plain TIMESTAMP (LTZ) column so every
     event-time operator — in particular ``withWatermark``, which rejects
     TIMESTAMP_NTZ — works downstream.
 
-    * older readers + ``nanosAsLong``: long nanos → truncate to micros
-      with integer DIV (no double round-trip — ns epoch values exceed
-      2^53), matching DuckDB's own ns→µs truncation so oracle hashes
-      agree;
-    * Spark 4.1+: the nanos column surfaces as TIMESTAMP_NTZ → cast to
+    * every shipped events.parquet stores TIMESTAMP(MICROS,
+      isAdjustedToUTC=false), which surfaces as TIMESTAMP_NTZ → cast to
       TIMESTAMP. Value-preserving under the pinned UTC session timezone,
-      and collected values stringify identically to the naive oracle's.
+      and collected values stringify identically to the naive oracle's;
+    * a TIMESTAMP(NANOS) file read with ``nanosAsLong`` (session.py)
+      surfaces as long nanos → truncate to micros with integer DIV (no
+      double round-trip — ns epoch values exceed 2^53), matching
+      DuckDB's own ns→µs truncation so oracle hashes agree.
     """
     from pyspark.sql import functions as F
 

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from oxi_diel_db_spark import cli
 from oxi_diel_db_spark.ml import comp_model as CM
+from oxi_diel_db_spark.ml.pipeline import scale_features_pop
 from oxi_diel_db_spark.sources import materials as M
 
 
@@ -41,7 +42,7 @@ def test_comp_model_in_corpus_quality(spark, mats):
     corpus (reference comp models hit 0.986/0.967 with richer matminer
     features; floor here is lower but non-trivial)."""
     model = CM.train_model(mats, "el", "comp", num_trees=40)
-    feats = CM.scale_features_pop(
+    feats = scale_features_pop(
         CM.comp_features(CM._labels(mats)), CM.COMP_FEATURES
     ).dropna(subset=CM.COMP_FEATURES + ["label_el"])
     scored = model.transform(feats)

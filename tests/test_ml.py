@@ -162,7 +162,7 @@ def test_golden_file_parity_all_configs(spark, mats):
         features = CM.COMP_FEATURES + (
             CM.STRUCT_FEATURES if des == "comp_st" else []
         )
-        feats = CM.scale_features_pop(CM.comp_features(base), features).dropna(
+        feats = P.scale_features_pop(CM.comp_features(base), features).dropna(
             subset=features + [label]
         )
         model = CM.train_model(mats, diel, des, num_trees=60)

@@ -19,7 +19,7 @@ from oxi_diel_db_spark.sources import materials as M
 
 @pytest.fixture(scope="module")
 def descriptors(spark):
-    return RP.materialized_descriptors(spark)
+    return RP.materialized(spark, "el_comp")
 
 
 def test_descriptor_shape_and_nulls(spark, descriptors):
@@ -66,7 +66,7 @@ def test_ml7_golden_parity_el_comp(spark):
     """THE parity gate: RF over the exact 34-slot descriptor must track
     the reference's own golden predictions at corr >= 0.98 on all 1,266
     golden rows (measured 0.995 at 60 trees / depth 12 / seed 42)."""
-    model, feats = RP.train_el_comp_reference(spark)
+    model, feats = RP.train_reference(spark, "el_comp")
     scored = model.transform(feats).select("mp_id", "pred_log10")
     golden = M.predictions(spark).filter(F.col("model") == "el_comp")
     row = (
@@ -86,7 +86,7 @@ def test_ml7_beats_analog_descriptor_parity(spark):
     the 11-feature analog model's measured 0.947 (test_ml floors 0.92).
     A regression below that means the exact assembly stopped adding
     information over the analog set."""
-    model, feats = RP.train_el_comp_reference(spark)
+    model, feats = RP.train_reference(spark, "el_comp")
     scored = model.transform(feats).select("mp_id", "pred_log10")
     golden = M.predictions(spark).filter(F.col("model") == "el_comp")
     c = (
@@ -104,7 +104,7 @@ def test_ml7_beats_analog_descriptor_parity(spark):
 
 @pytest.fixture(scope="module")
 def ion_descriptors(spark):
-    return RP.materialized_ion_descriptors(spark)
+    return RP.materialized(spark, "ion_comp")
 
 
 def test_ion_descriptor_shape_and_ranges(spark, ion_descriptors):
@@ -137,7 +137,7 @@ def test_ml9_golden_parity_ion_comp(spark):
     on all 1,266 golden rows (measured 0.985 at 60 trees; the analog
     11-feature model measured 0.928 — the exact descriptors must beat
     it)."""
-    model, feats = RP.train_ion_comp_reference(spark)
+    model, feats = RP.train_reference(spark, "ion_comp")
     scored = model.transform(feats).select("mp_id", "pred_log10")
     golden = M.predictions(spark).filter(F.col("model") == "ion_comp")
     row = (
@@ -159,7 +159,7 @@ def test_ml9_golden_parity_ion_comp(spark):
 
 
 def test_el_st_descriptor_shape(spark):
-    d = RP.materialized_el_st_descriptors(spark)
+    d = RP.materialized(spark, "el_st")
     n_corpus = M.materials(spark).count()
     assert d.count() == n_corpus
     assert set(RP.EL_COMP_ST_COLUMNS) <= set(d.columns)
@@ -182,7 +182,7 @@ def test_ml11_golden_parity_el_comp_st(spark):
     it). A few corpus rows drop for NULL structural slots (sparse
     cells outside the OPS cutoff) — coverage floor asserts the drop
     stays small."""
-    model, feats = RP.train_el_st_reference(spark)
+    model, feats = RP.train_reference(spark, "el_st")
     scored = model.transform(feats).select("mp_id", "pred_log10")
     golden = M.predictions(spark).filter(F.col("model") == "el_comp_st")
     row = (
@@ -203,7 +203,7 @@ def test_ml11_golden_parity_el_comp_st(spark):
 
 
 def test_ion_st_descriptor_shape(spark):
-    d = RP.materialized_ion_st_descriptors(spark)
+    d = RP.materialized(spark, "ion_st")
     n_corpus = M.materials(spark).count()
     assert d.count() == n_corpus
     assert set(RP.ION_COMP_ST_COLUMNS) <= set(d.columns)
@@ -225,7 +225,7 @@ def test_ml13_golden_parity_ion_comp_st(spark):
     """Parity gate, ion structural tier: corr >= 0.96 vs the golden
     ion_comp_st predictions (measured 0.979 at 60 trees; the analog
     model measured 0.970)."""
-    model, feats = RP.train_ion_st_reference(spark)
+    model, feats = RP.train_reference(spark, "ion_st")
     scored = model.transform(feats).select("mp_id", "pred_log10")
     golden = M.predictions(spark).filter(F.col("model") == "ion_comp_st")
     row = (

@@ -61,31 +61,13 @@ ANALOG_SLOTS = {
 def _train_score_corr(spark, desc_df, cols, label_col, golden_model):
     """Reference-configuration RF (60 trees, depth 12, seed 42) on the
     given descriptor columns; returns corr(pred, golden log10_eps)."""
-    from pyspark.ml import Pipeline
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.regression import RandomForestRegressor
-
     from oxi_diel_db_spark.ml import comp_model as CM
-    from oxi_diel_db_spark.ml.pipeline import scale_features_pop
+    from oxi_diel_db_spark.ml import pipeline as P
     from oxi_diel_db_spark.sources import materials as M
 
     labels = CM._labels(M.materials(spark)).select("mp_id", label_col)
-    feats = scale_features_pop(desc_df.join(labels, "mp_id"), cols).dropna(
-        subset=cols + [label_col]
-    )
-    pipe = Pipeline(
-        stages=[
-            VectorAssembler(inputCols=cols, outputCol="features"),
-            RandomForestRegressor(
-                featuresCol="features",
-                labelCol=label_col,
-                predictionCol="pred_log10",
-                numTrees=60,
-                maxDepth=12,
-                seed=42,
-            ),
-        ]
-    )
+    feats = P.training_frame(desc_df.join(labels, "mp_id"), cols, label_col)
+    pipe = P.rf_pipeline(cols, label_col, 60, 42)
     scored = pipe.fit(feats).transform(feats).select("mp_id", "pred_log10")
     golden = M.predictions(spark).filter(F.col("model") == golden_model)
     row = (
@@ -103,12 +85,12 @@ def main() -> None:
     spark = get_spark("ablate_analogs")
     tiers = {
         "el_comp_st": (
-            RP.materialized_el_st_descriptors(spark),
+            RP.materialized(spark, "el_st"),
             list(RP.EL_COMP_ST_COLUMNS),
             "label_el",
         ),
         "ion_comp_st": (
-            RP.materialized_ion_st_descriptors(spark),
+            RP.materialized(spark, "ion_st"),
             list(RP.ION_COMP_ST_COLUMNS),
             "label_ion",
         ),

@@ -12,9 +12,9 @@ CORRECTNESS file, diffs against the current registry, and prints:
 
 Usage: python tools/rotation_plan.py [--json]
 Run at the START of a round, after the driver has written the new
-CORRECTNESS file — the output is the next `_R{N+1}_PRIORITY` seed
-(new/changed queries then take slots from the tail, per the standing
-deferral rule in queries/__init__.py).
+CORRECTNESS file — the output seeds the next `_PRIORITY` list in
+queries/__init__.py (after the fixed `_SENTINELS` head; new/changed
+queries then take slots from the tail).
 """
 
 from __future__ import annotations
@@ -33,8 +33,8 @@ _PKG = "oxi_diel_db_spark"
 
 def _registering_module(name: str) -> str | None:
     """Module file that holds the ``register("name", ...)`` call
-    (NOT queries/__init__.py — its rotation lists quote every name
-    but carry no behavior)."""
+    (NOT queries/__init__.py — its priority list quotes names but
+    carries no behavior)."""
     for path in glob.glob(f"{_PKG}/queries/*.py"):
         if path.endswith("__init__.py"):
             continue
