@@ -179,8 +179,8 @@ def _scorer(
         return hit
     model = load_or_train(spark, materials, diel, des, num_trees)
     stats = _load_or_compute_scaler(spark, materials, des)
-    if None in stamp:  # an artifact was missing and has just been written
-        stamp = _stamp(spark, *key)
+    # a missing or unusable artifact has just been (re)written
+    stamp = _stamp(spark, *key)
     exprs = {**feature_columns(), **{c: F.col(c) for c in STRUCT_FEATURES}}
     features = _features(des)
     columns = []
@@ -265,13 +265,20 @@ def _load_or_compute_scaler(spark: SparkSession, materials: DataFrame, des: str)
     """Persisted scaling stats — the engine twin of the reference's
     fitted StandardScaler artifacts (prediction_model/*_scaler.joblib):
     fit once on the training corpus, reuse for every prediction (a
-    comp_st stats pass re-runs the pairwise site kernel otherwise)."""
+    comp_st stats pass re-runs the pairwise site kernel otherwise).
+    The load_or_fit policy: a file that is missing, does not parse or
+    lacks a feature's stat is recomputed, saved over and returned."""
     import json
 
     path = _scaler_path(des)
-    if os.path.exists(path):
+    keys = {f"{c}__{stat}" for c in _features(des) for stat in ("mu", "sd")}
+    try:
         with open(path) as fr:
-            return json.load(fr)
+            stats = json.load(fr)
+        if isinstance(stats, dict) and keys <= stats.keys():
+            return stats
+    except (OSError, ValueError):
+        pass  # missing, unreadable or truncated: recompute
     stats = _scaling_stats(materials, des).collect()[0].asDict()
     os.makedirs(MODELS_DIR, exist_ok=True)
     with open(path, "w") as fw:

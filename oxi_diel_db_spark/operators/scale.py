@@ -250,12 +250,12 @@ def merge_upsert_partitioned(
     # lineage reads target_path, which the write replaces. Bounded
     # collect — it's the partition list, not data.
     touched_vals = [r[0] for r in touched.collect()]
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(part_col).parquet(target_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(part_col)
+        .parquet(target_path)
+    )
     # drained partitions (touched but absent from the merged output):
     # dynamic overwrite never visited them, so their stale files must go.
     # merged is checkpointed, so this scans the checkpoint, not the

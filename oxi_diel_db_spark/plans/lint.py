@@ -30,6 +30,8 @@ import re
 
 from pyspark.sql import DataFrame
 
+from oxi_diel_db_spark.session import conf_scope
+
 Finding = tuple[str, str, str]
 
 
@@ -38,17 +40,8 @@ def _plans(df: DataFrame) -> tuple[str, str]:
     # FileScan metadata lists (DataFilters/PushedFilters) are truncated
     # at maxMetadataStringLength (default 100 chars) with a bare "...",
     # which would corrupt the pushdown audit — widen while rendering.
-    conf = df.sparkSession.conf
-    key = "spark.sql.maxMetadataStringLength"
-    old = conf.get(key, None)
-    conf.set(key, "100000")
-    try:
+    with conf_scope(df.sparkSession, {"spark.sql.maxMetadataStringLength": "100000"}):
         return qe.executedPlan().toString(), qe.optimizedPlan().toString()
-    finally:
-        if old is None:
-            conf.unset(key)
-        else:
-            conf.set(key, old)
 
 
 def lint(df: DataFrame, max_exchanges: int = 6) -> list[Finding]:

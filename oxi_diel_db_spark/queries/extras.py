@@ -15,6 +15,7 @@ from oxi_diel_db_spark.functions import text as TX
 from oxi_diel_db_spark.functions import formula as FM
 from oxi_diel_db_spark.queries import register
 from oxi_diel_db_spark.queries._util import r6, sql_sum_money, sum_money, t
+from oxi_diel_db_spark.session import conf_scope
 from oxi_diel_db_spark.sources import materials as M
 from oxi_diel_db_spark.tables import fanout
 
@@ -2343,26 +2344,27 @@ def q109_sql_scripting(spark, sf_dir):
     distributed; only the control flow is driver-side. Halving is
     exact in binary FP, so the DuckDB oracle — which cannot run the
     script — replays the IDENTICAL iteration as a recursive CTE and
-    must land on the same threshold and count."""
-    spark.conf.set("spark.sql.scripting.enabled", "true")
+    must land on the same threshold and count. The script runs inside
+    ``spark.sql``, so the scripting conf is needed only for that call."""
     t(spark, sf_dir, "events").createOrReplaceTempView("events_q109")
-    return spark.sql(
-        """
-        BEGIN
-          DECLARE thr DOUBLE DEFAULT 512.0;
-          DECLARE i INT DEFAULT 0;
-          WHILE i < 12
-            AND (SELECT COUNT(*) FROM events_q109 WHERE value > thr) < 1000
-          DO
-            SET thr = thr / 2;
-            SET i = i + 1;
-          END WHILE;
-          SELECT thr AS threshold,
-                 CAST((SELECT COUNT(*) FROM events_q109 WHERE value > thr)
-                      AS BIGINT) AS n_above;
-        END
-        """
-    )
+    with conf_scope(spark, {"spark.sql.scripting.enabled": "true"}):
+        return spark.sql(
+            """
+            BEGIN
+              DECLARE thr DOUBLE DEFAULT 512.0;
+              DECLARE i INT DEFAULT 0;
+              WHILE i < 12
+                AND (SELECT COUNT(*) FROM events_q109 WHERE value > thr) < 1000
+              DO
+                SET thr = thr / 2;
+                SET i = i + 1;
+              END WHILE;
+              SELECT thr AS threshold,
+                     CAST((SELECT COUNT(*) FROM events_q109 WHERE value > thr)
+                          AS BIGINT) AS n_above;
+            END
+            """
+        )
 
 
 @register(

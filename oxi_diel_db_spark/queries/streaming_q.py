@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from oxi_diel_db_spark.queries import register
 from oxi_diel_db_spark.queries._util import t
+from oxi_diel_db_spark.session import conf_scope
 from oxi_diel_db_spark.streaming import ops
 from oxi_diel_db_spark.tables import read_parquet
 
@@ -201,8 +202,7 @@ def st9_late_data(spark, sf_dir):
     work = tempfile.mkdtemp(prefix="st9_late_")
     ev = t(spark, sf_dir, "events").select("ts", "event_type")
     anchor = ev.agg(F.date_trunc("hour", F.max("ts")).alias("T")).collect()[0]["T"]
-    replay = ops.write_late_replay(ev, anchor, work)
-    stream = ops.replay_dir_stream(spark, replay)
+    stream = ops.replay_stream(spark, ops.write_late_replay(ev, anchor), work)
     agg = ops.watermarked_tumbling(stream, width="1 hour", late="1 hour")
     return ops.run_stream_to_memory(agg, spark, mode="append")
 
@@ -229,14 +229,11 @@ def st7_incremental_rollup(spark, sf_dir):
 
     work = tempfile.mkdtemp(prefix="st7_rollup_")
     stream = ops.read_events_stream(spark, sf_dir)
-    q = ops.rollup_delta_sink(
-        stream, f"{work}/rollup", f"{work}/ckpt", width="1 hour"
+    ops.drain(
+        ops.rollup_delta_sink(
+            stream, f"{work}/rollup", f"{work}/ckpt", width="1 hour"
+        )
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
     ops.compact_rollup(spark, f"{work}/rollup")
     return ops.read_rollup(spark, f"{work}/rollup")
 
@@ -314,27 +311,18 @@ def st10_stream_upsert_sink(spark, sf_dir):
         "event_type"
     ).parquet(table)
 
-    replay = os.path.join(work, "replay")
-    for i in (1, 2, 3):  # one file per span, mtime-ordered → one per batch
-        span(i).coalesce(1).write.mode("append").parquet(replay)
-
-    stream = ops.replay_dir_stream(spark, replay)
+    stream = ops.replay_stream(spark, [span(i) for i in (1, 2, 3)], work)
 
     def apply_batch(bdf, _bid):
         merge_upsert_partitioned(
             spark, table, last_per_user(bdf), key="user_id", part_col="event_type"
         )
 
-    q = (
+    ops.drain(
         stream.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", os.path.join(work, "ckpt"))
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
 
     back = spark.read.parquet(table)
     return back.select(
@@ -371,21 +359,41 @@ def st11_stream_dq_monitor(spark, sf_dir):
     st7's delta-maintenance shape."""
     import tempfile
 
-    from pyspark.sql import functions as F
-
     work = tempfile.mkdtemp(prefix="st11_dq_")
     stream = ops.read_events_stream(spark, sf_dir)
-    q = ops.dq_delta_sink(stream, f"{work}/ledger", f"{work}/ckpt")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    ops.drain(ops.dq_delta_sink(stream, f"{work}/ledger", f"{work}/ckpt"))
     ledger = spark.read.parquet(f"{work}/ledger")
     return ledger.groupBy("constraint").agg(
         F.sum("n_checked").alias("n_checked"),
         F.sum("n_violations").alias("n_violations"),
     )
+
+
+def _two_phase_rollup(
+    spark, sf_dir: str, prefix: str, retain_history: bool = False
+) -> str:
+    """st12/q94's ingest: phase-1 events (even ids), then phase-2
+    events (odd ids), each replayed as two bands (two micro-batches,
+    two delta partials) into one rollup dir and compacted after its
+    phase (MANIFEST-1, MANIFEST-2). Returns the rollup dir."""
+    import tempfile
+
+    work = tempfile.mkdtemp(prefix=prefix)
+    ev = t(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
+    rollup = f"{work}/rollup"
+    for phase in (0, 1):
+        bands = [
+            ev.filter(F.col("event_id") % 4 == r).drop("event_id")
+            for r in (phase, phase + 2)
+        ]
+        stream = ops.replay_stream(spark, bands, f"{work}/phase{phase}")
+        ops.drain(
+            ops.rollup_delta_sink(
+                stream, rollup, f"{work}/ckpt{phase}", width="1 hour"
+            )
+        )
+        ops.compact_rollup(spark, rollup, retain_history=retain_history)
+    return rollup
 
 
 @register(
@@ -409,30 +417,7 @@ def st12_compaction_cycles(spark, sf_dir):
     over ALL events: the invariant that makes compaction a pure
     maintenance operation, invisible to readers at any interleaving.
     st7 gates one cycle; this gates the steady state."""
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="st12_compact_")
-    ev = t(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
-    rollup = f"{work}/rollup"
-    for phase in (0, 1):
-        rep = f"{work}/replay{phase}"
-        (
-            ev.filter(F.col("event_id") % 2 == phase)
-            .drop("event_id")
-            .coalesce(2)
-            .write.parquet(rep)
-        )
-        stream = ops.replay_dir_stream(spark, rep)
-        q = ops.rollup_delta_sink(
-            stream, rollup, f"{work}/ckpt{phase}", width="1 hour"
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
-        ops.compact_rollup(spark, rollup)
-    return ops.read_rollup(spark, rollup)
+    return ops.read_rollup(spark, _two_phase_rollup(spark, sf_dir, "st12_compact_"))
 
 
 @register(
@@ -497,9 +482,7 @@ def st13_stream_left_outer_join(spark, sf_dir):
     pure per-task overhead in BOTH the join batch and the closing
     eviction batch). r6 verdict ask: 7.1 s → 2.6 s measured at sf0.1,
     values hash-identical (partitioning never affects results)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": "8"}):
         stream = ops.read_events_stream(
             spark, sf_dir, max_files_per_trigger=None
         )
@@ -510,8 +493,6 @@ def st13_stream_left_outer_join(spark, sf_dir):
             how="left_outer",
         )
         return ops.run_stream_to_memory(joined, spark, mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 @register(
@@ -538,29 +519,7 @@ def q94_time_travel(spark, sf_dir):
     history, the same retention knob every table format exposes). The
     hash gate proves the pinned snapshot ignores rows the CURRENT view
     has long since absorbed."""
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="q94_tt_")
-    ev = t(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
-    rollup = f"{work}/rollup"
-    for phase in (0, 1):
-        rep = f"{work}/replay{phase}"
-        (
-            ev.filter(F.col("event_id") % 2 == phase)
-            .drop("event_id")
-            .coalesce(2)
-            .write.parquet(rep)
-        )
-        stream = ops.replay_dir_stream(spark, rep)
-        q = ops.rollup_delta_sink(
-            stream, rollup, f"{work}/ckpt{phase}", width="1 hour"
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
-        ops.compact_rollup(spark, rollup, retain_history=True)
+    rollup = _two_phase_rollup(spark, sf_dir, "q94_tt_", retain_history=True)
     return ops.read_rollup(spark, rollup, as_of=1)
 
 
@@ -685,9 +644,7 @@ def st16_python_stream_source(spark, sf_dir):
     from oxi_diel_db_spark.sources.events_replay import register_events_replay
 
     register_events_replay(spark)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": "8"}):
         raw = (
             spark.readStream.format("events_replay")
             .option("path", f"{sf_dir}/events.parquet")
@@ -702,8 +659,6 @@ def st16_python_stream_source(spark, sf_dir):
             ),
         )
         return ops.run_stream_to_memory(agg, spark, mode="complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 @register(
@@ -725,28 +680,21 @@ def st17_rocksdb_window(spark, sf_dir):
     streaming/ops.running_totals_tws). State-provider choice must be
     invisible to results: the gate is st1's oracle verbatim, so a
     value divergence between providers fails the hash. The provider
-    conf is read PER QUERY at stream start — pinned here and restored
-    in a finally, the same session-hygiene pattern as dq_delta_sink's
-    partitionOverwriteMode. The RocksDB engagement itself (native
-    rocksdb customMetrics in the query progress) is asserted in
+    conf is read PER QUERY at stream start — pinned for the run by
+    session.conf_scope. The RocksDB engagement itself (native rocksdb
+    customMetrics in the query progress) is asserted in
     tests/test_streaming.py."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
+    provider = (
         "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+        "RocksDBStateStoreProvider"
     )
-    try:
+    with conf_scope(
+        spark, {"spark.sql.streaming.stateStore.providerClass": provider}
+    ):
         stream = ops.read_events_stream(spark, sf_dir)
         return ops.run_stream_to_memory(
             ops.tumbling_counts(stream, "1 hour"), spark
         )
-    finally:
-        if prev is not None:
-            spark.conf.set(key, prev)
-        else:
-            spark.conf.unset(key)
 
 
 @register(
@@ -801,9 +749,7 @@ def st18_stream_full_outer_join(spark, sf_dir):
     replay and 8-way state partitioning as st13; the oracle encodes
     each side's eviction boundary separately against the final
     min-policy watermark."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": "8"}):
         stream = ops.read_events_stream(
             spark, sf_dir, max_files_per_trigger=None
         )
@@ -814,8 +760,6 @@ def st18_stream_full_outer_join(spark, sf_dir):
             how="full_outer",
         )
         return ops.run_stream_to_memory(joined, spark, mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 @register(
@@ -996,9 +940,7 @@ def st21_streaming_ivf_upsert(spark, sf_dir):
     from oxi_diel_db_spark.operators import similarity
 
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    hi = emb.agg(F.max("vec_id")).collect()[0][0] + 1  # scalar anchor
-    half = hi // 2
-    boot = emb.filter(F.col("vec_id") < half)
+    boot, bands = ops.split_arrivals(emb, "vec_id")
     assigned_boot, cents = similarity.ivf_index(boot, n_centroids=8, seed=42)
 
     work = tempfile.mkdtemp(prefix="st21_ivf_")
@@ -1008,19 +950,7 @@ def st21_streaming_ivf_upsert(spark, sf_dir):
         "overwrite"
     ).parquet(index_dir)
 
-    # the post-bootstrap half arrives as 4 chunk files (one per
-    # micro-batch, mtime-ordered)
-    cuts = [half + (hi - half) * i // 4 for i in range(5)]
-    rest = emb.filter(F.col("vec_id") >= half)
-    chunks = [
-        rest.filter(
-            (F.col("vec_id") >= cuts[i]) & (F.col("vec_id") < cuts[i + 1])
-        )
-        for i in range(4)
-    ]
-    replay_dir = ops.write_replay_files(chunks, work)
-
-    stream = ops.replay_dir_stream(spark, replay_dir)
+    stream = ops.replay_stream(spark, bands, work)
 
     def upsert(batch_df, _bid):
         # per-micro-batch index maintenance: assign to frozen cells,
@@ -1031,16 +961,11 @@ def st21_streaming_ivf_upsert(spark, sf_dir):
             "vec_id", "cell", "cv", "cn"
         ).write.mode("append").parquet(index_dir)
 
-    q = (
+    ops.drain(
         stream.writeStream.foreachBatch(upsert)
         .option("checkpointLocation", f"{work}/ckpt")
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
 
     maintained = spark.read.parquet(index_dir)
     probes = emb.filter(F.col("vec_id") < 5).select(
@@ -1137,25 +1062,13 @@ def st22_streaming_neardup_ingest(spark, sf_dir):
     )
 
     d = t(spark, sf_dir, "documents").select("doc_id", "text")
-    hi = d.agg(F.max("doc_id")).collect()[0][0] + 1  # scalar anchor
-    half = hi // 2
-    boot = d.filter(F.col("doc_id") < half)
-    rest = d.filter(F.col("doc_id") >= half)
+    boot, bands = ops.split_arrivals(d, "doc_id")
 
     work = tempfile.mkdtemp(prefix="st22_lsh_")
     store = f"{work}/sigstore"
     result = f"{work}/pairs"
     minhash_signatures(boot).write.mode("overwrite").parquet(store)
-
-    cuts = [half + (hi - half) * i // 4 for i in range(5)]
-    chunks = [
-        rest.filter(
-            (F.col("doc_id") >= cuts[i]) & (F.col("doc_id") < cuts[i + 1])
-        )
-        for i in range(4)
-    ]
-    replay_dir = ops.write_replay_files(chunks, work)
-    stream = ops.replay_dir_stream(spark, replay_dir)
+    stream = ops.replay_stream(spark, bands, work)
 
     # Append order matters: the batch goes INTO the store FIRST,
     # then pairs batch-vs-store — (store_id < new_id) yields
@@ -1192,16 +1105,11 @@ def st22_streaming_neardup_ingest(spark, sf_dir):
             .parquet(result)
         )
 
-    q = (
+    ops.drain(
         stream.writeStream.foreachBatch(ingest_ordered)
         .option("checkpointLocation", f"{work}/ckpt")
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
 
     try:
         return spark.read.parquet(result)
@@ -1301,22 +1209,13 @@ def st23_streaming_cdc_ingest(spark, sf_dir):
     sub-file granularity.
 
     100 TB posture: chunk keys are 16 bytes at ~64-byte granularity;
-    the store is append-only parquet (st12 compaction applies); the
-    per-batch join scans the store at replay scale, and the
-    deployment layout that bounds the join input is bucketBy(chash) +
-    a broadcast semi-join of the batch's keys — implemented behind
-    SPARK_GRAFT_ST23_STORE=bucketed (r12; gate values identical by
-    construction: the semi-join drops only store rows whose key no
-    batch chunk carries, which can never match the left join). Rung 2
-    (r13): SPARK_GRAFT_ST23_STORE=compacted persists the COMPACT
-    per-key state instead of raw instances (one row per distinct chunk
-    key — operators/multimodal.cdc_chunk_state proves the order rule
-    needs nothing more), so the per-batch store READ is O(distinct
-    keys), sub-linear in ingested bytes under duplication, where both
-    raw layouts still scan every instance ever ingested. All three
-    layouts' ingest growth curves are measured in SCALE.md §18 —
-    scale_probe.py cdc_ingest."""
-    import os
+    the persisted store is the COMPACT per-key state, one row per
+    distinct chunk key (operators/multimodal.cdc_chunk_state proves
+    the order rule needs nothing more), so each batch's store read is
+    O(distinct keys), sub-linear in ingested bytes under duplication,
+    where a raw instance store scans every instance ever ingested
+    (SCALE.md §18 measures both growth curves, scale_probe.py
+    cdc_ingest)."""
     import tempfile
 
     from oxi_diel_db_spark.operators.multimodal import (
@@ -1326,66 +1225,43 @@ def st23_streaming_cdc_ingest(spark, sf_dir):
         cdc_state_merge,
     )
 
-    layout = os.environ.get("SPARK_GRAFT_ST23_STORE", "scan")
-    bucketed = layout == "bucketed"
-    compacted = layout == "compacted"
-
     d = t(spark, sf_dir, "documents").select("doc_id")
-    hi = d.agg(F.max("doc_id")).collect()[0][0] + 1
-    half = hi // 2
-    boot = d.filter(F.col("doc_id") < half)
-    rest = d.filter(F.col("doc_id") >= half)
+    boot, bands = ops.split_arrivals(d, "doc_id")
 
     work = tempfile.mkdtemp(prefix="st23_cdc_")
-    store = f"{work}/chunkstore"
     result = f"{work}/accounting"
-    boot_ch = cdc_chunks(cdc_fixture_table(boot))
-    # rung 2 (compacted): the persisted store is the COMPACT per-key
-    # state (operators/multimodal.cdc_chunk_state) — one row per
-    # distinct chunk key, versioned parquet; each batch reads the
-    # previous version (O(distinct keys), sub-linear in ingested bytes
-    # under duplication), merges its own compact state, writes the new
-    # version, and scores against the read-back of what it WROTE (the
-    # persisted-chunk contract, same as the raw layouts).
-    cur_state = {"path": f"{store}_state_v_boot", "ver": 0}
-    if compacted:
-        cdc_chunk_state(boot_ch).write.parquet(cur_state["path"])
-    elif bucketed:
-        # one table per invocation: the driver runs queries() entries
-        # repeatedly in one session (uuid, the memory-sink convention)
-        import uuid
+    # versioned store: each batch reads the previous version, merges
+    # its own compact state, writes the next version and scores against
+    # the read-back of what it WROTE (the persisted-chunk contract)
+    store = {"path": f"{work}/chunkstate_v0", "ver": 0}
+    cdc_chunk_state(cdc_chunks(cdc_fixture_table(boot))).write.parquet(
+        store["path"]
+    )
+    stream = ops.replay_stream(spark, bands, work)
 
-        store_tbl = f"st23_store_{uuid.uuid4().hex[:8]}"
-        (
-            # same bucket-aligned repartition as the per-batch appends:
-            # without it the bootstrap lands as 16 x tasks files — the
-            # exact small-file/re-list pressure the append path avoids
-            # (r12 ADVICE)
-            boot_ch.repartition(16, F.col("chash"))
-            .write.bucketBy(16, "chash")
-            .sortBy("chash")
-            .mode("overwrite")
-            .option("path", store)
-            .format("parquet")
-            .saveAsTable(store_tbl)
+    def ingest_ordered(batch_df, _bid):
+        ch_b = cdc_chunks(cdc_fixture_table(batch_df)).localCheckpoint()
+        if not ch_b.take(1):
+            return
+        prev = spark.read.parquet(store["path"])
+        store["ver"] += 1
+        store["path"] = f"{work}/chunkstate_v{store['ver']}"
+        cdc_state_merge(prev, cdc_chunk_state(ch_b)).write.parquet(store["path"])
+        state = spark.read.parquet(store["path"])
+        # 1:1 join (state is unique per chash; every batch chunk
+        # matches — its own doc is in the state), so the order rule
+        # evaluates directly, no per-chunk max over partners needed
+        hit = ch_b.join(state, "chash", "left").select(
+            "doc_id",
+            "c_len",
+            F.coalesce(
+                (
+                    (F.col("min_doc") < F.col("doc_id"))
+                    | ((F.col("min_doc") == F.col("doc_id")) & (F.col("cnt_min") > 1))
+                ).cast("int"),
+                F.lit(0),
+            ).alias("is_dup"),
         )
-    else:
-        boot_ch.write.mode("overwrite").parquet(store)
-
-    cuts = [half + (hi - half) * i // 4 for i in range(5)]
-    chunks_in = [
-        rest.filter(
-            (F.col("doc_id") >= cuts[i]) & (F.col("doc_id") < cuts[i + 1])
-        )
-        for i in range(4)
-    ]
-    replay_dir = ops.write_replay_files(chunks_in, work)
-    stream = ops.replay_dir_stream(spark, replay_dir)
-
-    def _write_accounting(hit):
-        """Per-doc accounting over (doc_id, chunk_idx, c_len, is_dup)
-        — identical across store layouts, so the gate values are
-        layout-independent by construction."""
         (
             hit.groupBy("doc_id")
             .agg(
@@ -1407,98 +1283,9 @@ def st23_streaming_cdc_ingest(spark, sf_dir):
             .parquet(result)
         )
 
-    def ingest_ordered(batch_df, _bid):
-        ch_b = cdc_chunks(cdc_fixture_table(batch_df)).localCheckpoint()
-        if not ch_b.take(1):
-            return
-        if compacted:
-            prev = spark.read.parquet(cur_state["path"])
-            merged = cdc_state_merge(prev, cdc_chunk_state(ch_b))
-            cur_state["ver"] += 1
-            new_path = f"{store}_state_v{cur_state['ver']}"
-            merged.write.parquet(new_path)
-            cur_state["path"] = new_path
-            state = spark.read.parquet(new_path)
-            # 1:1 join (state is unique per chash; every batch chunk
-            # matches — its own doc is in the state), so the order rule
-            # evaluates directly, no per-chunk max over partners needed
-            hit = ch_b.join(state, "chash", "left").select(
-                "doc_id",
-                "chunk_idx",
-                "c_len",
-                F.coalesce(
-                    (
-                        (F.col("min_doc") < F.col("doc_id"))
-                        | (
-                            (F.col("min_doc") == F.col("doc_id"))
-                            & (F.col("cnt_min") > 1)
-                        )
-                    ).cast("int"),
-                    F.lit(0),
-                ).alias("is_dup"),
-            )
-            _write_accounting(hit)
-            return
-        if bucketed:
-            (
-                # one file per bucket per append: align partitions to
-                # the bucket hash so the store's file count grows by
-                # 16/batch, not 16×tasks (small-file + re-list cost)
-                ch_b.repartition(16, F.col("chash"))
-                .write.bucketBy(16, "chash")
-                .sortBy("chash")
-                .mode("append")
-                .format("parquet")
-                .saveAsTable(store_tbl)
-            )
-            # the relation cache keeps the FIRST batch's file-listing
-            # snapshot across micro-batches — without the refresh,
-            # batch N>0 misses its own append (measured: in-batch dup
-            # matches silently lost)
-            spark.catalog.refreshTable(store_tbl)
-            # broadcast semi-join of the batch's keys: bounds the join
-            # input to store rows whose 16-byte key the batch carries
-            store_src = spark.table(store_tbl).join(
-                F.broadcast(ch_b.select("chash").distinct()),
-                "chash",
-                "leftsemi",
-            )
-        else:
-            ch_b.write.mode("append").parquet(store)
-            store_src = spark.read.parquet(store)
-        store_ch = store_src.select(
-            F.col("doc_id").alias("p_doc"),
-            F.col("chunk_idx").alias("p_idx"),
-            F.col("chash"),
-        )
-        hit = (
-            ch_b.join(store_ch, "chash", "left")
-            .withColumn(
-                "m",
-                (
-                    (F.col("p_doc") < F.col("doc_id"))
-                    | (
-                        (F.col("p_doc") == F.col("doc_id"))
-                        & (F.col("p_idx") != F.col("chunk_idx"))
-                    )
-                ).cast("int"),
-            )
-            .groupBy("doc_id", "chunk_idx", "c_len")
-            .agg(F.max(F.coalesce("m", F.lit(0))).alias("is_dup"))
-        )
-        _write_accounting(hit)
-
-    q = (
+    ops.drain(
         stream.writeStream.foreachBatch(ingest_ordered)
         .option("checkpointLocation", f"{work}/ckpt")
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-        if bucketed:  # metastore hygiene; the result dir is separate
-            spark.sql(f"DROP TABLE IF EXISTS {store_tbl}")
-
     return spark.read.parquet(result)

@@ -9,6 +9,8 @@ core count but are overridable via env for cluster submission.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -97,3 +99,21 @@ def configure(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # static conf on a running session — keep the session's value
     return spark
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, values: dict[str, str]) -> Iterator[SparkSession]:
+    """Set session confs for the block; on exit (also by an exception)
+    restore each key's prior value, or unset it if it had none. The one
+    place a query or operator changes session conf for a bounded span."""
+    prior = {k: spark.conf.get(k, None) for k in values}
+    for k, v in values.items():
+        spark.conf.set(k, v)
+    try:
+        yield spark
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -10,10 +10,14 @@ source is identical (that is the point of Structured Streaming).
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from oxi_diel_db_spark.queries._util import cents
 
@@ -266,26 +270,46 @@ def stream_stream_join(
 # ---- execution helpers -----------------------------------------------------
 
 
-def run_stream_to_memory(
-    stream_df: DataFrame, spark: SparkSession, mode: str = "complete"
-) -> DataFrame:
-    """Drive a streaming DF to completion against the file source and
-    return the materialized result (memory sink). Synchronous:
-    processAllAvailable drains every available file, then the query stops
-    — deterministic, suited to tests and the driver's collect."""
-    name = f"st_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream_df.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
+def drain(q: StreamingQuery) -> None:
+    """Process every available input, then stop the query and wait for
+    it to terminate — also when processing raises. The one way a
+    replay-driven query runs to completion (tests and the driver's
+    collect need it synchronous and deterministic)."""
     try:
         q.processAllAvailable()
     finally:
         q.stop()
         q.awaitTermination()
+
+
+def run_stream_to_memory(
+    stream_df: DataFrame, spark: SparkSession, mode: str = "complete"
+) -> DataFrame:
+    """Drain a streaming DF into a uuid-named memory sink and return
+    the materialized result."""
+    name = f"st_{uuid.uuid4().hex[:12]}"
+    drain(
+        stream_df.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .start()
+    )
     return spark.table(name)
+
+
+def split_arrivals(df: DataFrame, key: str) -> tuple[DataFrame, list[DataFrame]]:
+    """The bootstrap-then-arrivals split of the incremental-ingest
+    queries: rows whose ``key`` is below half of ``max(key) + 1`` form
+    the bootstrap; the rest arrive as four key-range bands (one
+    micro-batch each under replay_stream). One scalar collect; every
+    oracle encodes the same ``half``."""
+    hi = df.agg(F.max(key)).collect()[0][0] + 1
+    half = hi // 2
+    cuts = [half + (hi - half) * i // 4 for i in range(5)]
+    k = F.col(key)
+    return df.filter(k < half), [
+        df.filter((k >= cuts[i]) & (k < cuts[i + 1])) for i in range(4)
+    ]
 
 
 def watermarked_tumbling(events: DataFrame, width: str = "1 hour", late: str = "15 minutes") -> DataFrame:
@@ -300,19 +324,16 @@ def watermarked_tumbling(events: DataFrame, width: str = "1 hour", late: str = "
     )
 
 
-def write_late_replay(
-    events: DataFrame, anchor_hour, work_dir: str
-) -> str:
-    """Materialize a 4-file replay of ``events`` that injects LATE rows
-    (T4's test harness — the file mtimes order the micro-batches, one
-    file per trigger):
+def write_late_replay(events: DataFrame, anchor_hour) -> list[DataFrame]:
+    """The five bands of a replay of ``events`` that injects LATE rows
+    (T4's test harness; replay_stream plays one band per trigger):
 
     * b0: ts <  T−6h                       (old head; low watermark)
     * b1: T−6h ≤ ts < T−3h                 (advances watermark to ≈T−4h)
     * b2: EMPTY. Spark ≥3.4 splits the watermark: late-event filtering
       uses the PREVIOUS micro-batch's watermark, eviction the current
       one (SPARK-24634 line of work) — so the watermark b1 advanced
-      only governs late-row drops one batch later. The empty file
+      only governs late-row drops one batch later. The empty band
       interposes that batch.
     * b3: copies of [T−4h, T−3h) — late but WITHIN the 1h allowed
       lateness (window end T−3h > watermark ≈T−4h → kept), plus copies
@@ -321,19 +342,15 @@ def write_late_replay(
     * b4: ts ≥ T−3h                        (tail; finalizes windows up
       to max(ts) − 1h)
 
-    ``anchor_hour`` is T = date_trunc('hour', max(ts)). Returns the
-    replay directory path.
+    ``anchor_hour`` is T = date_trunc('hour', max(ts)).
     """
     import datetime
-    import glob
-    import os
-    import shutil
 
     def off(h: int):
         return anchor_hour - datetime.timedelta(hours=h)
 
     ts = F.col("ts")
-    bands = [
+    return [
         events.filter(ts < off(6)),
         events.filter((ts >= off(6)) & (ts < off(3))),
         events.filter(F.lit(False)),  # watermark-activation batch
@@ -342,18 +359,17 @@ def write_late_replay(
         ),
         events.filter(ts >= off(3)),
     ]
-    return write_replay_files(bands, work_dir)
 
 
-def write_replay_files(bands: list[DataFrame], work_dir: str) -> str:
-    """Materialize one parquet file per DataFrame under
-    ``work_dir/replay`` with mtimes pinning the micro-batch order
-    (the file source replays oldest-mtime first). The generic writer
-    behind write_late_replay and every chunked-arrival harness."""
-    import glob
-    import os
-    import shutil
-
+def replay_stream(
+    spark: SparkSession, bands: list[DataFrame], work_dir: str
+) -> DataFrame:
+    """Write one parquet file per band under ``work_dir/replay``, with
+    mtimes pinning the micro-batch order (the file source replays
+    oldest-mtime first), and return the file stream over it, one file
+    per micro-batch. The stream takes the bands' own schema, so no
+    footer-inference job reads back what was just written (the file
+    source forces every field nullable, as a parquet read-back does)."""
     replay_dir = os.path.join(work_dir, "replay")
     os.makedirs(replay_dir, exist_ok=True)
     for i, band in enumerate(bands):
@@ -362,18 +378,10 @@ def write_replay_files(bands: list[DataFrame], work_dir: str) -> str:
         part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
         dst = os.path.join(replay_dir, f"b{i}.parquet")
         shutil.move(part, dst)
-        # file source replays oldest-mtime first: pin the batch order
         os.utime(dst, (1_000_000_000 + i * 10, 1_000_000_000 + i * 10))
         shutil.rmtree(tmp, ignore_errors=True)
-    return replay_dir
-
-
-def replay_dir_stream(spark: SparkSession, replay_dir: str) -> DataFrame:
-    """File-source stream over a replay directory, one file per
-    micro-batch in mtime order."""
-    schema = spark.read.parquet(replay_dir).schema
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(bands[0].schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(replay_dir)
     )
@@ -427,8 +435,8 @@ def rollup_delta_sink(
     correctness never depends on watermark tuning, and the sink is a
     plain parquet append (idempotent per epochId via the checkpoint).
 
-    Returns the StreamingQuery; caller drives it (processAllAvailable
-    in tests, run forever in production).
+    Returns the StreamingQuery; the caller drives it (``drain`` in
+    tests and queries, run forever in production).
     """
 
     def _write_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -485,7 +493,6 @@ def _rollup_state(out_dir: str, as_of: int | None = None):
     retain_history=True)`` so old bases/manifests survive later runs
     (the vacuum-vs-time-travel trade every table format exposes)."""
     import json
-    import os
 
     manifests = sorted(
         (f for f in os.listdir(out_dir) if f.startswith("MANIFEST-") and f.endswith(".json"))
@@ -556,8 +563,6 @@ def compact_rollup(
     at any step leaves the previous manifest's view intact (orphaned
     output dirs are swept by the next successful run)."""
     import json
-    import os
-    import shutil
 
     n, compacted, consumed, live = _rollup_state(out_dir)
     if not live and compacted:
@@ -684,10 +689,10 @@ def dq_delta_sink(events: DataFrame, out_dir: str, ckpt_dir: str):
     Idempotence: foreachBatch is at-least-once — a retried micro-batch
     re-runs ``_audit`` with the SAME batch_id. Output is therefore
     partitioned by batch_id and written with dynamic partition
-    overwrite, so a retry REPLACES its own partition instead of
-    appending duplicate constraint rows (which would over-count any
-    re-aggregation of the ledger)."""
-    from pyspark.sql import functions as F
+    overwrite (a write option; the session conf stays as it is), so a
+    retry REPLACES its own partition instead of appending duplicate
+    constraint rows (which would over-count any re-aggregation of the
+    ledger)."""
 
     def _audit(batch_df: DataFrame, batch_id: int) -> None:
         checks = [
@@ -709,13 +714,12 @@ def dq_delta_sink(events: DataFrame, out_dir: str, ckpt_dir: str):
                 ).alias("n_violations"),
             )
             rows = r if rows is None else rows.unionByName(r)
-        spark = batch_df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            rows.write.mode("overwrite").partitionBy("batch_id").parquet(out_dir)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (
+            rows.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(out_dir)
+        )
 
     return (
         events.writeStream.foreachBatch(_audit)

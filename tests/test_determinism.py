@@ -6,12 +6,10 @@ Spark side is stable against its own planner first."""
 
 from __future__ import annotations
 
-import hashlib
-import math
-
 import pytest
 
 from oxi_diel_db_spark.queries import load_registry
+from tools.check_oracle import table_hash
 
 SF = "/root/testdata/sf0.001"
 
@@ -26,29 +24,8 @@ REPRESENTATIVE = [
 ]
 
 
-def _norm(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return str(int(v))
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else f"{v:.9g}"
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_norm(x) for x in v) + "]"
-    return str(v)
-
-
 def _value_hash(df) -> str:
-    cols = df.columns
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted(
-        "|".join(_norm(r[i]) for i in order) for r in df.collect()
-    )
-    h = hashlib.md5()
-    for line in lines:
-        h.update(line.encode())
-        h.update(b"\n")
-    return h.hexdigest()
+    return table_hash(df.columns, df.collect())
 
 
 @pytest.mark.parametrize("name", REPRESENTATIVE)

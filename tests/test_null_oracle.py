@@ -7,7 +7,6 @@ avgdl divergence this harness was built after; see the r6 notes)."""
 
 from __future__ import annotations
 
-import math
 import os
 
 import pytest
@@ -15,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from oxi_diel_db_spark.queries import load_registry
+from tools.check_oracle import norm_val
 
 # documents-only oracles over text payloads (NULL text every 7th doc)
 GATES = [
@@ -43,21 +43,9 @@ GATES = [
 ]
 
 
-def _norm(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return str(int(v))
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else f"{v:.9g}"
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_norm(x) for x in v) + "]"
-    return str(v)
-
-
 def _hash_rows(cols, rows):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted("|".join(_norm(r[i]) for i in order) for r in rows)
+    return sorted("|".join(norm_val(r[i]) for i in order) for r in rows)
 
 
 @pytest.fixture(scope="module")

@@ -141,6 +141,29 @@ def test_memo_reloads_rewritten_artifacts(spark, mats, monkeypatch, tmp_path):
     assert v4 != v3
 
 
+def test_unusable_scaler_is_recomputed_and_saved(spark, mats, monkeypatch, tmp_path):
+    """The scaler follows the model-artifact policy: a file that is
+    truncated, not text, or missing a feature's stat is recomputed,
+    saved over and served, and later calls read the rewritten file."""
+    monkeypatch.setattr(CM, "MODELS_DIR", str(tmp_path))
+    monkeypatch.setattr(CM, "_SCORERS", {})
+    key = ("el", "comp", 3)
+    target = {"formula": "SiO2"}
+    clean = CM.predict_log10_eps(spark, mats, target, *key)
+    path = CM._scaler_path("comp")
+    with open(path) as fr:
+        stats = json.load(fr)
+    text = json.dumps(stats)
+    missing_key = json.dumps({k: v for k, v in stats.items() if k != "en_mean__sd"})
+    for broken in (text[: len(text) // 2].encode(), b"\xff\xfe\x00", missing_key.encode()):
+        with open(path, "wb") as fw:
+            fw.write(broken)
+        served = [CM.predict_log10_eps(spark, mats, target, *key) for _ in range(2)]
+        assert served == [clean, clean]
+        with open(path) as fr:
+            assert json.load(fr) == stats
+
+
 _RESTART = """
 import json
 from oxi_diel_db_spark.ml import comp_model as CM

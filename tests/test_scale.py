@@ -366,7 +366,10 @@ def test_merge_upsert_rewrites_only_touched_partitions(spark, tmp_path):
         [(0, "NEW", 0), (5, "moved", 0), (1000, "ins", 1)],
         "k long, v string, p int",
     )
+    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     merge_upsert_partitioned(spark, target, updates, key="k", part_col="p")
+    # dynamic overwrite is a write option: the session conf is untouched
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == mode
 
     back = {r["k"]: (r["v"], r["p"]) for r in spark.read.parquet(target).collect()}
     assert back[0] == ("NEW", 0)

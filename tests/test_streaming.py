@@ -9,6 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from oxi_diel_db_spark.session import conf_scope
 from oxi_diel_db_spark.streaming import ops
 
 SF = "/root/testdata/sf0.001"
@@ -408,8 +409,7 @@ def test_late_data_replay_drops_beyond_watermark(spark, tmp_path):
     import os
 
     os.makedirs(work, exist_ok=True)
-    replay = ops.write_late_replay(ev, anchor, work)
-    stream = ops.replay_dir_stream(spark, replay)
+    stream = ops.replay_stream(spark, ops.write_late_replay(ev, anchor), work)
     agg = ops.watermarked_tumbling(stream, width="1 hour", late="1 hour")
     out = ops.run_stream_to_memory(agg, spark, mode="append")
     got = {(r["win_start"], r["event_type"]): r["n"] for r in out.collect()}
@@ -421,6 +421,67 @@ def test_late_data_replay_drops_beyond_watermark(spark, tmp_path):
     # T-1h) finalizes and emits, but the max-ts window [T,T+1h) doesn't
     assert got[(T - datetime.timedelta(hours=2), "e")] == 2
     assert (T, "f") not in got
+
+
+def _st9_bands(spark):
+    ev = _batch_events(spark).select("ts", "event_type")
+    anchor = ev.agg(F.date_trunc("hour", F.max("ts"))).collect()[0][0]
+    return ops.write_late_replay(ev, anchor)
+
+
+def _st10_bands(spark):
+    ev = _batch_events(spark).select("event_id", "ts", "user_id", "event_type", "value")
+    mid = ev.agg(F.max("ts")).collect()[0][0] - dt.timedelta(days=7)
+    return [ev.filter(F.col("ts") < F.lit(mid)), ev.filter(F.col("ts") >= F.lit(mid))]
+
+
+def _arrival_bands(table, key, *cols):
+    def bands(spark):
+        from oxi_diel_db_spark.tables import load
+
+        return ops.split_arrivals(load(spark, table, SF).select(key, *cols), key)[1]
+
+    return bands
+
+
+#: the bands each replay-driven query hands to replay_stream
+REPLAY_BANDS = {
+    "st9_events": _st9_bands,
+    "st10_events": _st10_bands,
+    "st21_embeddings": _arrival_bands("embeddings", "vec_id", "embedding"),
+    "st22_documents": _arrival_bands("documents", "doc_id", "text"),
+    "st23_documents": _arrival_bands("documents", "doc_id"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(REPLAY_BANDS))
+def test_replay_stream_takes_the_band_schema_without_a_job(spark, tmp_path, case):
+    """replay_stream's stream carries the schema a parquet read of its
+    replay directory infers, and building it runs only the band writes,
+    one job each: no footer-inference job reads back what was just
+    written."""
+    bands = REPLAY_BANDS[case](spark)
+    sc = spark.sparkContext
+    group = f"replay-{case}-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        stream = ops.replay_stream(spark, bands, str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == len(bands)
+    assert stream.isStreaming
+    assert stream.schema == spark.read.parquet(str(tmp_path / "replay")).schema
+
+
+def test_split_arrivals_bootstrap_half_and_four_bands(spark):
+    """Keys below half of max(key) + 1 bootstrap; the rest arrive as
+    four contiguous key-range bands that cover them exactly once."""
+    df = spark.range(0, 23).withColumnRenamed("id", "k")  # half = 23 // 2
+    boot, bands = ops.split_arrivals(df, "k")
+    assert sorted(r.k for r in boot.collect()) == list(range(11))
+    got = [sorted(r.k for r in b.collect()) for b in bands]
+    assert len(got) == 4 and all(got)
+    assert [k for b in got for k in b] == list(range(11, 23))
 
 
 def test_stream_upsert_sink_matches_batch_argmax(spark):
@@ -586,8 +647,11 @@ def test_stream_dq_monitor_ledger(spark):
     from oxi_diel_db_spark.queries import load_registry
 
     reg = load_registry()
+    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     out = {r["constraint"]: r for r in reg["st11_stream_dq_monitor"].build(
         spark, "/root/testdata/sf0.001").collect()}
+    # the ledger's dynamic overwrite is a write option, not a session flip
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == mode
     assert set(out) == {"enum_event_type", "notnull_value", "value_range_0_1000"}
     from oxi_diel_db_spark.tables import load
 
@@ -619,18 +683,9 @@ def test_rocksdb_state_store_drop_in(spark):
         }
 
     baseline = run()
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    provider = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    with conf_scope(spark, {"spark.sql.streaming.stateStore.providerClass": provider}):
         assert run() == baseline
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 def test_st12_compaction_cycles_repeat_invocation(spark):
@@ -846,14 +901,11 @@ def test_st17_rocksdb_provider_actually_engages(spark):
     got = sorted(map(tuple, reg["st17_rocksdb_window"].build(spark, sf).collect()))
     assert got == base
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
+    provider = (
         "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+        "RocksDBStateStoreProvider"
     )
-    try:
+    with conf_scope(spark, {"spark.sql.streaming.stateStore.providerClass": provider}):
         stream = ops.read_events_stream(spark, sf)
         q = (
             ops.tumbling_counts(stream, "1 hour")
@@ -868,11 +920,6 @@ def test_st17_rocksdb_provider_actually_engages(spark):
         finally:
             q.stop()
             q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set(key, prev)
-        else:
-            spark.conf.unset(key)
     ops_metrics = progress["stateOperators"]
     assert ops_metrics, json.dumps(progress)[:500]
     custom = ops_metrics[0].get("customMetrics", {})
@@ -986,9 +1033,8 @@ def test_st21_maintained_index_equals_batch_assignment(spark):
         rest.filter(F.col("vec_id") < mid),
         rest.filter(F.col("vec_id") >= mid),
     ]
-    replay = ops.write_replay_files(chunks, work)
-    q = (
-        ops.replay_dir_stream(spark, replay)
+    ops.drain(
+        ops.replay_stream(spark, chunks, work)
         .writeStream.foreachBatch(
             lambda bdf, _b: ivf_assign(bdf, cents)
             .select("vec_id", "cell", "cv", "cn")
@@ -998,11 +1044,6 @@ def test_st21_maintained_index_equals_batch_assignment(spark):
         .option("checkpointLocation", f"{work}/ckpt")
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
 
     got = {
         r["vec_id"]: r["cell"]
@@ -1139,27 +1180,6 @@ def test_st23_cumulative_ingest_equals_batch_cdc(spark):
     # the planted shifted-duplicate pairs make real dup mass flow
     # through the stream: at least one streamed doc is >90% dup bytes
     assert any(r[5] > 0.9 for r in got)
-
-
-def test_st23_store_layouts_agree(spark, monkeypatch):
-    """The three store layouts (scan / bucketed / compacted) must be
-    pure deployment choices: identical accounting rows from the same
-    corpus. In particular the r13 compacted layout's order-rule
-    reduction (min_doc < doc | (min_doc == doc & cnt_min > 1)) must
-    reproduce the raw instance-join's max-over-partners verdict."""
-    from oxi_diel_db_spark.queries import load_registry
-
-    sf = "/root/testdata/sf0.001"
-    reg = load_registry()
-    out = {}
-    for layout in ("scan", "bucketed", "compacted"):
-        monkeypatch.setenv("SPARK_GRAFT_ST23_STORE", layout)
-        out[layout] = {
-            tuple(r)
-            for r in reg["st23_streaming_cdc_ingest"].build(spark, sf).collect()
-        }
-    assert out["scan"] == out["bucketed"] == out["compacted"]
-    assert out["scan"]  # non-vacuous
 
 
 def test_cdc_chunk_state_rule_equivalence(spark):

@@ -24,6 +24,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from oxi_diel_db_spark import tables
+from oxi_diel_db_spark.session import conf_scope
 from oxi_diel_db_spark.sources.materials import MATERIALS_PARQUET
 from tests.conftest import SF_DIR
 
@@ -38,19 +39,6 @@ def job_group(spark, name):
         yield lambda: list(sc.statusTracker().getJobIdsForGroup(name))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-
-
-@contextmanager
-def conf(spark, key, value):
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
 
 
 def _outcome(read):
@@ -164,7 +152,7 @@ def test_nanos_as_long_flip_changes_events_ts(spark, tmp_path):
     key = "spark.sql.legacy.parquet.nanosAsLong"
     want = sorted(tables.load(spark, "events", SF_DIR).select("event_id", "ts").collect())
     for flag in ("true", "false", "true"):
-        with conf(spark, key, flag):
+        with conf_scope(spark, {key: flag}):
             assert _outcome(lambda: tables.read_parquet(spark, p)) == _outcome(
                 lambda: spark.read.parquet(p)
             )
@@ -214,7 +202,7 @@ def test_inference_conf_flip_reinfers(spark, tmp_path, key, values, write):
         write(p)
     seen = []
     for v in (*values, values[0]):
-        with conf(spark, key, v):
+        with conf_scope(spark, {key: v}):
             got = _outcome(lambda: tables.read_parquet(spark, p))
             want = _outcome(lambda: spark.read.parquet(p))
         assert got == want, (v, got, want)

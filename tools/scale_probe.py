@@ -433,11 +433,7 @@ def streaming_probe(n_m: float = 2) -> None:
             .queryName(name)
             .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
+        ops.drain(q)
         return time.time() - t0, len(q.recentProgress), spark.table(name).count()
 
     run(8)  # warmup: first streaming query in a fresh JVM pays state
@@ -1699,14 +1695,14 @@ def cdc_ingest_probe(n_docs: int = 60_000, n_batches: int = 8) -> None:
     cdc_fixture_table — ~1.2-1.8 KB each, ~30 chunks/doc, doc_id %
     10 == 1 shifted dups keep the dup matches real); the other half
     arrives in n_batches increments ingested into (a) the append-only
-    parquet dir the registered query ships by default (full store
-    scan per batch) and (b) the bucketBy(16, chash) + sortBy table
-    with a broadcast semi-join of the batch's keys
-    (SPARK_GRAFT_ST23_STORE=bucketed), and (c) the r13 rung-2
-    COMPACTED per-key count store (SPARK_GRAFT_ST23_STORE=compacted:
-    one row per distinct chunk key, merged every batch — the store
-    READ is O(distinct keys) instead of O(all instances); see
-    operators/multimodal.cdc_chunk_state). All three must produce
+    parquet dir (full store scan per batch), (b) the bucketBy(16,
+    chash) + sortBy table with a broadcast semi-join of the batch's
+    keys, and (c) the COMPACTED per-key count store the registered
+    query ships (one row per distinct chunk key, merged every batch —
+    the store READ is O(distinct keys) instead of O(all instances);
+    see operators/multimodal.cdc_chunk_state). The three layouts are
+    written out here by hand as the SCALE.md §18 record; the query
+    keeps only the compacted one. All three must produce
     IDENTICAL dup counts per batch (asserted); the per-batch state
     row count vs raw instance count quantifies the read pruning."""
     import tempfile
