@@ -250,6 +250,32 @@ SINGLES = [
 ]
 
 
+def host_stamp(spark, repo: str) -> dict:
+    """The machine and build a run was measured on, for the lossless
+    record: the host's cpu count, the session's parallelism
+    (local[$SPARK_GRAFT_CPUS]), the checkout's git sha (None outside a
+    git checkout) and the pyspark and python versions."""
+    import platform
+    import subprocess
+
+    import pyspark
+
+    try:
+        sha = subprocess.run(
+            ["git", "rev-parse", "HEAD"],
+            cwd=repo, capture_output=True, text=True, check=True,
+        ).stdout.strip()
+    except (OSError, subprocess.CalledProcessError):
+        sha = None
+    return {
+        "host_cpus": os.cpu_count(),
+        "session_cpus": spark.sparkContext.defaultParallelism,
+        "git_sha": sha,
+        "pyspark": pyspark.__version__,
+        "python": platform.python_version(),
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from __spark_entry__ import queries
@@ -337,6 +363,8 @@ def main() -> None:
         "reps": reps,
         "load1_pre": load1_pre,
     }
+    repo = os.path.dirname(os.path.abspath(__file__))
+    payload["host"] = host_stamp(spark, repo)
     stat_post = _stat_jiffies()
     if stat_pre and stat_post and stat_post[1] > stat_pre[1]:
         payload["steal_pct"] = round(
@@ -349,7 +377,6 @@ def main() -> None:
     # ALSO persist to a file: the driver's stdout tail buffer truncated
     # the head of r6's (long) JSON line, losing q01/q30/q31 from the
     # record (r6 verdict ask #7) — the file is the lossless copy.
-    repo = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(repo, "BENCH_LAST.json"), "w") as fh:
         fh.write(line + "\n")
     # AND an immutable per-run copy: BENCH_LAST.json is clobbered by

@@ -23,7 +23,8 @@ from __future__ import annotations
 
 import math
 import os
-from typing import NamedTuple
+import threading
+from typing import Callable, NamedTuple
 
 from pyspark.errors import ArithmeticException, NumberFormatException
 from pyspark.ml import PipelineModel
@@ -31,6 +32,7 @@ from pyspark.ml.linalg import Vectors
 from pyspark.ml.regression import RandomForestRegressionModel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from oxi_diel_db_spark.functions import composition as C
 from oxi_diel_db_spark.ml.pipeline import SCRATCH_DIR, load_or_fit, rf_pipeline, training_frame
@@ -139,19 +141,22 @@ def _scaling_stats(materials: DataFrame, des: str) -> DataFrame:
 
 class _Scorer(NamedTuple):
     """One config's single-target scorer: the forest and the scaled
-    feature Columns over a ``VALUES`` row holding the formula (and, for
-    comp_st, the structure doubles). Holds no prediction."""
+    feature expressions, compiled once into ``featurize`` over the
+    target's inputs (``formula``, then for comp_st the four structure
+    doubles). Holds no prediction."""
 
     stamp: tuple
     rf: RandomForestRegressionModel
     features: list[str]
-    columns: list[Column]
+    inputs: list[str]
+    featurize: Callable[[list], list]
 
 
 #: (diel, des, num_trees) → scorer. An entry is rebuilt when its stamp —
-#: the SparkContext and the model directory's and scaler file's mtimes —
-#: no longer matches, so a restarted session or a rewritten artifact is
-#: never served from a stale model.
+#: the SparkContext, the model directory's and scaler file's mtimes and
+#: the ANSI mode (the resolved casts and divisions carry their eval
+#: mode) — no longer matches, so a restarted session, a rewritten
+#: artifact or a flipped mode is never served from a stale projection.
 _SCORERS: dict[tuple[str, str, int], _Scorer] = {}
 
 
@@ -166,7 +171,52 @@ def _stamp(spark: SparkSession, diel: str, des: str, num_trees: int) -> tuple:
         spark.sparkContext,
         mtime(_model_path(diel, des, num_trees)),
         mtime(_scaler_path(des)),
+        spark.conf.get("spark.sql.ansi.enabled"),
     )
+
+
+def _featurizer(
+    spark: SparkSession, inputs: list[str], columns: list[Column]
+) -> Callable[[list], list]:
+    """``columns`` as one interpreted ``UnsafeProjection`` over a row of
+    ``inputs``, returned as ``values → [feature or None]``.
+
+    The plan is analyzed and optimized once, over an empty RDD relation
+    the optimizer cannot fold. The optimized projectList is the one
+    taken: the optimizer has replaced its ``RuntimeReplaceable`` nodes
+    (the tokenizer's ``nullif``), which cannot be evaluated. Interpreted,
+    not generated: py4j caches a method by its class's name, and every
+    generated projection class has the same name, so a second generated
+    projection in one JVM would be called through the first one's method.
+    """
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    X = jvm.org.apache.spark.sql.catalyst.expressions
+    schema = StructType(
+        [StructField(c, StringType() if c == "formula" else DoubleType()) for c in inputs]
+    )
+    plan = spark.createDataFrame(sc.emptyRDD(), schema).select(*columns)
+    plan = plan._jdf.queryExecution().optimizedPlan()
+    attrs = getattr(X, "package$AttributeSeq")(plan.child().output())
+    projection = X.InterpretedUnsafeProjection.createProjection(
+        X.BindReferences.bindReferences(plan.projectList(), attrs)
+    )
+    new_array, obj = sc._gateway.new_array, jvm.java.lang.Object
+    utf8, row_of = jvm.org.apache.spark.unsafe.types.UTF8String, X.GenericInternalRow
+    n = len(columns)
+    lock = threading.Lock()  # the projection reuses one output row
+
+    def featurize(values: list) -> list:
+        arr = new_array(obj, len(values))
+        arr[0] = utf8.fromString(values[0])
+        for i, v in enumerate(values[1:], 1):
+            arr[i] = v
+        row_in = row_of(arr)
+        with lock:
+            row = projection.apply(row_in)
+            return [None if row.isNullAt(i) else row.getDouble(i) for i in range(n)]
+
+    return featurize
 
 
 def _scorer(
@@ -188,7 +238,9 @@ def _scorer(
         mu, sd = stats[f"{c}__mu"], stats[f"{c}__sd"]
         sd = sd if sd and sd > 0 else 1.0
         columns.append(((exprs[c] - F.lit(mu)) / F.lit(sd)).alias(c))
-    scorer = _Scorer(stamp, model.stages[-1], features, columns)
+    inputs = ["formula"] + (STRUCT_FEATURES if des == "comp_st" else [])
+    featurize = _featurizer(spark, inputs, columns)
+    scorer = _Scorer(stamp, model.stages[-1], features, inputs, featurize)
     _SCORERS[key] = scorer
     return scorer
 
@@ -215,12 +267,11 @@ def predict_log10_eps(
     ml_prediction.py:64-65); the engine accepts all four.
 
     Served on the driver, like the reference's in-process joblib model:
-    the memoized scorer's feature Columns are evaluated over an inline
-    one-row ``VALUES`` relation (the optimizer folds it to a
-    LocalTableScan, so no Spark job runs) and the forest scores that
-    row with one JVM call. ``materials`` is read only when an artifact
-    has to be trained or the scaler computed. Batch scoring stays
-    ``model.transform``.
+    the memoized scorer's projection evaluates the target's row in the
+    JVM (no plan is analyzed and no Spark job runs per call) and the
+    forest scores the features with one JVM call. ``materials`` is read
+    only when an artifact has to be trained or the scaler computed.
+    Batch scoring stays ``model.transform``.
     """
     diel = {"electronic": "el", "ionic": "ion", "el": "el", "ion": "ion"}.get(
         dielectric_type
@@ -234,23 +285,19 @@ def predict_log10_eps(
 
     scorer = _scorer(spark, materials, diel, model_type, num_trees)
     formula = target["formula"]
-    args = {"formula": formula}
-    if model_type == "comp_st":
-        args.update({c: float(target[c]) for c in STRUCT_FEATURES})
-    markers = ", ".join(f":{name}" for name in args)
-    row_sql = f"SELECT * FROM VALUES ({markers}) AS t({', '.join(args)})"
+    values = [formula] + [float(target[c]) for c in scorer.inputs[1:]]
     try:
-        row = spark.sql(row_sql, args=args).select(*scorer.columns).collect()[0]
+        feats = scorer.featurize(values)
     except (ArithmeticException, NumberFormatException) as e:
         # ANSI mode raises where legacy mode yields null: 0/0 for an
         # empty formula, a malformed count such as 'Si1.5.O2'
         raise ValueError(f"cannot featurize formula {formula!r}: {e.getCondition()}") from e
-    bad = [c for c, v in zip(scorer.features, row) if v is None or math.isnan(v)]
+    bad = [c for c, v in zip(scorer.features, feats) if v is None or math.isnan(v)]
     if bad:
         raise ValueError(
             f"cannot score formula {formula!r}: null/NaN features {', '.join(bad)}"
         )
-    return float(scorer.rf.predict(Vectors.dense(row)))
+    return float(scorer.rf.predict(Vectors.dense(feats)))
 
 
 def _model_path(diel: str, des: str, num_trees: int) -> str:

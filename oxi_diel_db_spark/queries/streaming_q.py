@@ -1078,8 +1078,7 @@ def st22_streaming_neardup_ingest(spark, sf_dir):
         sig_b = minhash_signatures(batch_df).localCheckpoint()
         if not sig_b.take(1):
             return
-        sig_b.write.mode("append").parquet(store)
-        store_sigs = spark.read.parquet(store)
+        store_sigs = ops.write_read_back(sig_b, store, "append")
         bb_new = sig_b.select(
             F.col("doc_id").alias("doc_b"),
             F.col("sig").alias("sig_b"),
@@ -1233,21 +1232,25 @@ def st23_streaming_cdc_ingest(spark, sf_dir):
     # versioned store: each batch reads the previous version, merges
     # its own compact state, writes the next version and scores against
     # the read-back of what it WROTE (the persisted-chunk contract)
-    store = {"path": f"{work}/chunkstate_v0", "ver": 0}
-    cdc_chunk_state(cdc_chunks(cdc_fixture_table(boot))).write.parquet(
-        store["path"]
-    )
+    store = {
+        "state": ops.write_read_back(
+            cdc_chunk_state(cdc_chunks(cdc_fixture_table(boot))),
+            f"{work}/chunkstate_v0",
+        ),
+        "ver": 0,
+    }
     stream = ops.replay_stream(spark, bands, work)
 
     def ingest_ordered(batch_df, _bid):
         ch_b = cdc_chunks(cdc_fixture_table(batch_df)).localCheckpoint()
         if not ch_b.take(1):
             return
-        prev = spark.read.parquet(store["path"])
         store["ver"] += 1
-        store["path"] = f"{work}/chunkstate_v{store['ver']}"
-        cdc_state_merge(prev, cdc_chunk_state(ch_b)).write.parquet(store["path"])
-        state = spark.read.parquet(store["path"])
+        state = ops.write_read_back(
+            cdc_state_merge(store["state"], cdc_chunk_state(ch_b)),
+            f"{work}/chunkstate_v{store['ver']}",
+        )
+        store["state"] = state
         # 1:1 join (state is unique per chash; every batch chunk
         # matches — its own doc is in the state), so the order rule
         # evaluates directly, no per-chunk max over partners needed

@@ -387,6 +387,15 @@ def replay_stream(
     )
 
 
+def write_read_back(df: DataFrame, path: str, mode: str = "errorifexists") -> DataFrame:
+    """Write ``df`` as parquet under ``path`` and return a read of that
+    directory that takes ``df``'s own schema, so no footer-inference job
+    reads back what was just written (the reader forces every field
+    nullable, as an inferring read does)."""
+    df.write.mode(mode).parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
 def stateful_user_counts(events: DataFrame) -> DataFrame:
     """T6: arbitrary stateful processing via applyInPandasWithState —
     a per-user running event counter (the minimal custom-state shape;

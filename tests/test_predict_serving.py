@@ -1,7 +1,8 @@
 """Single-target serving of ``predict_log10_eps``: the driver-side
 scorer must give the batch ``model.transform`` answer bit for bit in
-both ANSI modes, start no Spark job once warm, refuse formulas it
-cannot featurize, and reload when its session or artifacts change."""
+both ANSI modes, start no Spark job and plan no query once warm, serve
+concurrent callers, refuse formulas it cannot featurize, and reload
+when its session, artifacts or ANSI mode change."""
 
 from __future__ import annotations
 
@@ -11,12 +12,16 @@ import re
 import shutil
 import subprocess
 import sys
+import threading
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from oxi_diel_db_spark.ml import comp_model as CM
+from oxi_diel_db_spark.session import conf_scope
 from oxi_diel_db_spark.sources import materials as M
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -167,6 +172,7 @@ def test_unusable_scaler_is_recomputed_and_saved(spark, mats, monkeypatch, tmp_p
 _RESTART = """
 import json
 from oxi_diel_db_spark.ml import comp_model as CM
+from oxi_diel_db_spark.session import conf_scope
 from oxi_diel_db_spark.session import get_spark
 from oxi_diel_db_spark.sources.materials import materials
 
@@ -200,3 +206,54 @@ def test_restarted_session_reloads_and_predicts_the_same(spark, mats):
     )
     result = json.loads(out.stdout.strip().splitlines()[-1])
     assert result == {"v1": expected, "v2": expected, "reloaded": True}
+
+
+def test_scorer_follows_a_flipped_ansi_mode(spark, mats):
+    """A scorer warmed with ANSI off is rebuilt when ANSI is turned on:
+    the resolved casts carry their eval mode, so a malformed count
+    raises instead of scoring nulls."""
+    with conf_scope(spark, {"spark.sql.ansi.enabled": "false"}):
+        CM.predict_log10_eps(spark, mats, {"formula": "BaTiO3"}, "el", "comp", TREES)
+        with pytest.raises(ValueError, match="null/NaN features"):
+            CM.predict_log10_eps(spark, mats, {"formula": "Si1.5.O2"}, "el", "comp", TREES)
+    with conf_scope(spark, {"spark.sql.ansi.enabled": "true"}):
+        with pytest.raises(ValueError, match="CAST_INVALID_INPUT"):
+            CM.predict_log10_eps(spark, mats, {"formula": "Si1.5.O2"}, "el", "comp", TREES)
+
+
+def test_concurrent_calls_return_the_serial_values(spark, mats):
+    """The scorer's projection reuses one output row; four threads
+    scoring 25 corpus formulas each get exactly the serial answers."""
+    formulas = [
+        r.formula
+        for r in mats.select("formula").distinct().orderBy("formula").limit(25).collect()
+    ]
+
+    def score_all():
+        return [
+            CM.predict_log10_eps(spark, mats, {"formula": f}, "el", "comp", TREES)
+            for f in formulas
+        ]
+
+    serial = score_all()
+    start = threading.Barrier(4)
+
+    def worker():
+        start.wait()
+        return score_all()
+
+    with ThreadPoolExecutor(4) as pool:
+        results = [f.result() for f in [pool.submit(worker) for _ in range(4)]]
+    assert results == [serial] * 4
+
+
+def test_warm_call_runs_no_sql_and_builds_no_dataframe(spark, mats, monkeypatch):
+    target = {"formula": "BaTiO3"}
+    expected = CM.predict_log10_eps(spark, mats, target, "el", "comp", TREES)  # warm
+
+    def refuse(*_a, **_k):
+        raise AssertionError("a warm predict_log10_eps must not plan a query")
+
+    monkeypatch.setattr(SparkSession, "sql", refuse)
+    monkeypatch.setattr(SparkSession, "createDataFrame", refuse)
+    assert CM.predict_log10_eps(spark, mats, target, "el", "comp", TREES) == expected

@@ -9,6 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from oxi_diel_db_spark import tables
 from oxi_diel_db_spark.session import conf_scope
 from oxi_diel_db_spark.streaming import ops
 
@@ -128,9 +129,7 @@ def test_parquet_sink_with_checkpoint(spark, tmp_path):
         .option("checkpointLocation", ckpt)
         .start()
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
+    ops.drain(q)
     back = spark.read.parquet(out)
     assert back.count() == _batch_events(spark).count()
     # restart with same checkpoint: no files left to process → no dups
@@ -142,9 +141,7 @@ def test_parquet_sink_with_checkpoint(spark, tmp_path):
         .option("checkpointLocation", ckpt)
         .start()
     )
-    q2.processAllAvailable()
-    q2.stop()
-    q2.awaitTermination()
+    ops.drain(q2)
     assert spark.read.parquet(out).count() == _batch_events(spark).count()
 
 
@@ -160,9 +157,7 @@ def test_foreach_batch_sink(spark):
         .writeStream.foreachBatch(sink)
         .start()
     )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
+    ops.drain(q)
     assert sum(seen.values()) == _batch_events(spark).count()
 
 
@@ -252,11 +247,7 @@ def test_rollup_delta_sink_equals_batch(spark, tmp_path):
     out = str(tmp_path / "rollup")
     ckpt = str(tmp_path / "ckpt")
     q = ops.rollup_delta_sink(stream, out, ckpt, width="1 hour")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    ops.drain(q)
 
     import glob
 
@@ -473,6 +464,60 @@ def test_replay_stream_takes_the_band_schema_without_a_job(spark, tmp_path, case
     assert stream.schema == spark.read.parquet(str(tmp_path / "replay")).schema
 
 
+def _st22_store(spark):
+    from oxi_diel_db_spark.operators.dedup import minhash_signatures
+
+    return minhash_signatures(tables.load(spark, "documents", SF).select("doc_id", "text"))
+
+
+def _st23_store(spark):
+    from oxi_diel_db_spark.operators.multimodal import (
+        cdc_chunk_state,
+        cdc_chunks,
+        cdc_fixture_table,
+        cdc_state_merge,
+    )
+
+    docs = tables.load(spark, "documents", SF).select("doc_id")
+    state = cdc_chunk_state(cdc_chunks(cdc_fixture_table(docs.filter("doc_id % 2 = 0"))))
+    other = cdc_chunk_state(cdc_chunks(cdc_fixture_table(docs.filter("doc_id % 2 = 1"))))
+    return cdc_state_merge(state, other)
+
+
+#: the frames st22 (signature store) and st23 (chunk-state version)
+#: write and read back in every micro-batch
+STORES = {"st22_sigstore": _st22_store, "st23_chunkstate": _st23_store}
+
+
+@pytest.mark.parametrize("case", sorted(STORES))
+def test_write_read_back_takes_the_written_schema_without_a_job(spark, tmp_path, case):
+    """write_read_back runs the jobs of the write alone: no footer-
+    inference job reads back the store just written, and the read-back
+    has the schema and rows of an inferring parquet read."""
+    df = STORES[case](spark).localCheckpoint()
+    sc = spark.sparkContext
+
+    def jobs(name, fn):
+        group = f"readback-{case}-{name}-{tmp_path.name}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    n_write, _ = jobs("write", lambda: df.write.parquet(str(tmp_path / "plain")))
+    store = str(tmp_path / "store")
+    n_back, back = jobs("back", lambda: ops.write_read_back(df, store))
+    assert n_back == n_write
+    n_append, back = jobs("append", lambda: ops.write_read_back(df, store, "append"))
+    assert n_append == n_write
+    inferred = spark.read.parquet(store)
+    assert back.schema == inferred.schema
+    assert sorted(back.collect()) == sorted(inferred.collect())
+    assert back.count() == 2 * df.count() > 0
+
+
 def test_split_arrivals_bootstrap_half_and_four_bands(spark):
     """Keys below half of max(key) + 1 bootstrap; the rest arrive as
     four contiguous key-range bands that cover them exactly once."""
@@ -490,7 +535,6 @@ def test_stream_upsert_sink_matches_batch_argmax(spark):
     over the whole event history (computed here independently)."""
     from pyspark.sql import Window
 
-    from oxi_diel_db_spark import tables
     from oxi_diel_db_spark.queries import load_registry
 
     sf = "/root/testdata/sf0.001"
@@ -609,9 +653,7 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
         )
 
     q1 = start("ckpt_leg1")
-    q1.processAllAvailable()
-    q1.stop()
-    q1.awaitTermination()
+    ops.drain(q1)
     seen_leg1 = {r["event_type"]: r["n"] for r in spark.table("ckpt_leg1").collect()}
     assert sum(seen_leg1.values()) == ev.filter(F.col("event_id") % 4 < 2).count()
 
@@ -619,9 +661,7 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     for i in range(2, 4):
         shutil.copy2(os.path.join(replay, f"b{i}.parquet"), live)
     q2 = start("ckpt_leg2")
-    q2.processAllAvailable()
-    q2.stop()
-    q2.awaitTermination()
+    ops.drain(q2)
 
     got = {
         (r["event_type"]): (r["n"], r["cents"])
@@ -865,14 +905,8 @@ def test_python_stream_source_multibatch_equals_batch(spark):
         .queryName("st16_cadence_probe")
         .start()
     )
-    try:
-        q.processAllAvailable()
-        data_batches = [
-            p for p in q.recentProgress if p["numInputRows"] > 0
-        ]
-    finally:
-        q.stop()
-        q.awaitTermination()
+    ops.drain(q)
+    data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
     assert len(data_batches) == math.ceil(n_rows / 300)
     ev = load(spark, "events", SF)
     want = {
@@ -914,12 +948,8 @@ def test_st17_rocksdb_provider_actually_engages(spark):
             .queryName("st17_probe")
             .start()
         )
-        try:
-            q.processAllAvailable()
-            progress = q.lastProgress
-        finally:
-            q.stop()
-            q.awaitTermination()
+        ops.drain(q)
+        progress = q.lastProgress  # a stopped query keeps its progress
     ops_metrics = progress["stateOperators"]
     assert ops_metrics, json.dumps(progress)[:500]
     custom = ops_metrics[0].get("customMetrics", {})
@@ -972,11 +1002,7 @@ def test_st19_within_watermark_drops_near_dups_and_expires_state(spark):
         .queryName(name)
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    ops.drain(q)
     got = sorted((r["k"], r["v"]) for r in spark.table(name).collect())
     # key 1's 00:40 redelivery dropped (inside horizon); its March
     # occurrence kept (state expired after the watermark passed)
