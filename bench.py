@@ -16,6 +16,7 @@ import json
 import os
 import sys
 import time
+from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -250,6 +251,26 @@ SINGLES = [
 ]
 
 
+def bench_reps() -> int:
+    """N of the min-of-N: $SPARK_GRAFT_BENCH_REPS, default 3."""
+    return int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
+
+
+def min_time(name: str, run: Callable[[], object], reps: int) -> float:
+    """The one timing protocol: the fastest of ``reps`` timed calls of
+    ``run`` (one query build and collect), after one untimed call when
+    ``name`` is in WARM_PLAN. Wall seconds, unrounded."""
+    if name in WARM_PLAN:  # absorb one-time plan compile / runner spin-up
+        run()
+    best = float("inf")
+    for _ in range(reps):
+        t0 = time.time()
+        rows = run()
+        best = min(best, time.time() - t0)
+        assert rows is not None
+    return best
+
+
 def host_stamp(spark, repo: str) -> dict:
     """The machine and build a run was measured on, for the lossless
     record: the host's cpu count, the session's parallelism
@@ -327,27 +348,16 @@ def main() -> None:
     # The min is the stable plan-cost estimator. N=3 since r12 (was 2):
     # the r11 adjudication showed min-of-2 still admits ~1.2x uniform
     # drift; a third rep costs ~70 s at sf0.1 and tightens the min.
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        if name in WARM_PLAN:  # absorb one-time plan compile untimed
-            qs[name](spark, sf_dir).collect()
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.time()
-            rows = qs[name](spark, sf_dir).collect()
-            best = min(best, time.time() - t0)
-            assert rows is not None
-        timings[name] = round(best, 3)
+    reps = bench_reps()
+    timings = {
+        name: round(min_time(name, lambda: qs[name](spark, sf_dir).collect(), reps), 3)
+        for name in HEADLINE
+    }
     total = round(sum(timings.values()), 3)
-    singles: dict[str, float] = {}
-    for name in SINGLES:
-        if name in WARM_PLAN:  # absorb one-time compile/runner spin-up
-            qs[name](spark, sf_dir).collect()
-        t0 = time.time()
-        rows = qs[name](spark, sf_dir).collect()
-        assert rows is not None
-        singles[name] = round(time.time() - t0, 3)
+    singles = {
+        name: round(min_time(name, lambda: qs[name](spark, sf_dir).collect(), 1), 3)
+        for name in SINGLES
+    }
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     payload = {
         "metric": "headline_suite_runtime",

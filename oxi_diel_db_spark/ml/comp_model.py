@@ -21,6 +21,8 @@ executable path; parity is statistical, SURVEY §5.2).
 
 from __future__ import annotations
 
+import glob
+import json
 import math
 import os
 import threading
@@ -28,8 +30,6 @@ from typing import Callable, NamedTuple
 
 from pyspark.errors import ArithmeticException, NumberFormatException
 from pyspark.ml import PipelineModel
-from pyspark.ml.linalg import Vectors
-from pyspark.ml.regression import RandomForestRegressionModel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
@@ -139,14 +139,106 @@ def _scaling_stats(materials: DataFrame, des: str) -> DataFrame:
     )
 
 
+#: One tree as five node-indexed lists: left child (-1 at a leaf), right
+#: child, split feature, split threshold and prediction.
+_Tree = tuple[list[int], list[int], list[int], list[float], list[float]]
+
+_FOREST_CLASS = "org.apache.spark.ml.regression.RandomForestRegressionModel"
+_NODE_COLUMNS = [
+    "treeID",
+    "nodeData.id",
+    "nodeData.prediction",
+    "nodeData.leftChild",
+    "nodeData.rightChild",
+    "nodeData.split.featureIndex",
+    "nodeData.split.leftCategoriesOrThreshold",
+    "nodeData.split.numCategories",
+]
+
+
+def _read_forest(model_dir: str, num_features: int) -> list[_Tree]:
+    """The forest of a saved ``rf_pipeline`` model, read from its node
+    table (``stages/1_*/data``, one row per node) without Spark.
+
+    The layout is the one Spark's tree-ensemble writer uses: node ids
+    are dense per tree in pre-order (root 0, children after their
+    parent), a leaf has ``leftChild == -1`` and a continuous split has
+    ``numCategories == -1`` and one threshold. Anything else — another
+    model class, a feature count other than ``num_features``, a tree
+    count other than the metadata's ``numTrees``, a categorical split,
+    a child out of range, a missing or unreadable file — raises."""
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    (stage,) = glob.glob(os.path.join(model_dir, "stages", "1_*"))
+    (meta_file,) = glob.glob(os.path.join(stage, "metadata", "part-*"))
+    with open(meta_file) as fr:
+        meta = json.loads(fr.readline())
+    if meta["class"] != _FOREST_CLASS or meta["numFeatures"] != num_features:
+        raise ValueError(f"{stage}: not a {num_features}-feature regression forest")
+    num_trees = meta["numTrees"]
+
+    table = pq.read_table(os.path.join(stage, "data"), columns=_NODE_COLUMNS)
+    if any(col.null_count for col in table.columns):
+        raise ValueError(f"{stage}: null in the node table")
+    col = dict(zip(table.column_names, table.columns))
+    lists = col.pop("leftCategoriesOrThreshold")
+    col = {c: v.to_numpy() for c, v in col.items()}
+    col["n_thresholds"] = pc.list_value_length(lists).to_numpy()
+    col["threshold"] = np.full(table.num_rows, math.nan)
+    col["threshold"][pc.list_parent_indices(lists).to_numpy()] = pc.list_flatten(lists).to_numpy()
+    order = np.lexsort((col["id"], col["treeID"]))
+    col = {c: v[order] for c, v in col.items()}
+
+    tree_id = col["treeID"]
+    starts = np.flatnonzero(np.r_[True, tree_id[1:] != tree_id[:-1]])
+    ends = np.r_[starts[1:], len(tree_id)]
+    node = np.arange(len(tree_id)) - np.repeat(starts, ends - starts)
+    size = np.repeat(ends - starts, ends - starts)
+    left, right, feature = col["leftChild"], col["rightChild"], col["featureIndex"]
+    inner = left != -1
+    ok = (
+        len(tree_id) > 0
+        and len(starts) == num_trees
+        and np.array_equal(col["id"], node)
+        and (right[~inner] == -1).all()
+        and (col["numCategories"][inner] == -1).all()
+        and (col["n_thresholds"][inner] == 1).all()
+        and ((feature[inner] >= 0) & (feature[inner] < num_features)).all()
+        and all(
+            ((child[inner] > node[inner]) & (child[inner] < size[inner])).all()
+            for child in (left, right)
+        )
+    )
+    if not ok:
+        raise ValueError(f"{stage}: not a forest of dense continuous-split trees")
+    parts = [left, right, feature, col["threshold"], col["prediction"]]
+    return [tuple(p[a:b].tolist() for p in parts) for a, b in zip(starts, ends)]
+
+
+def _predict(forest: list[_Tree], x: list[float]) -> float:
+    """``RandomForestRegressionModel.predict``: each tree sends ``x``
+    left when ``x[feature] <= threshold`` (``ContinuousSplit``), and the
+    leaf predictions are summed in tree order from 0.0 and divided by
+    the tree count."""
+    total = 0.0
+    for left, right, feature, threshold, prediction in forest:
+        i = 0
+        while (j := left[i]) != -1:
+            i = j if x[feature[i]] <= threshold[i] else right[i]
+        total += prediction[i]
+    return total / len(forest)
+
+
 class _Scorer(NamedTuple):
-    """One config's single-target scorer: the forest and the scaled
-    feature expressions, compiled once into ``featurize`` over the
-    target's inputs (``formula``, then for comp_st the four structure
-    doubles). Holds no prediction."""
+    """One config's single-target scorer: the forest's node lists and
+    the scaled feature expressions, compiled once into ``featurize``
+    over the target's inputs (``formula``, then for comp_st the four
+    structure doubles). Holds no prediction."""
 
     stamp: tuple
-    rf: RandomForestRegressionModel
+    forest: list[_Tree]
     features: list[str]
     inputs: list[str]
     featurize: Callable[[list], list]
@@ -227,12 +319,20 @@ def _scorer(
     hit = _SCORERS.get(key)
     if hit is not None and hit.stamp == stamp:
         return hit
-    model = load_or_train(spark, materials, diel, des, num_trees)
+    features = _features(des)
+    path = _model_path(*key)
+    try:
+        forest = _read_forest(path, len(features))
+    except (OSError, ValueError, LookupError, TypeError):
+        # missing, truncated or garbled (pyarrow raises OSError or
+        # ValueError subclasses): the load_or_fit policy loads it with
+        # Spark or else refits and saves it
+        load_or_train(spark, materials, *key)
+        forest = _read_forest(path, len(features))
     stats = _load_or_compute_scaler(spark, materials, des)
     # a missing or unusable artifact has just been (re)written
     stamp = _stamp(spark, *key)
     exprs = {**feature_columns(), **{c: F.col(c) for c in STRUCT_FEATURES}}
-    features = _features(des)
     columns = []
     for c in features:
         mu, sd = stats[f"{c}__mu"], stats[f"{c}__sd"]
@@ -240,7 +340,7 @@ def _scorer(
         columns.append(((exprs[c] - F.lit(mu)) / F.lit(sd)).alias(c))
     inputs = ["formula"] + (STRUCT_FEATURES if des == "comp_st" else [])
     featurize = _featurizer(spark, inputs, columns)
-    scorer = _Scorer(stamp, model.stages[-1], features, inputs, featurize)
+    scorer = _Scorer(stamp, forest, features, inputs, featurize)
     _SCORERS[key] = scorer
     return scorer
 
@@ -269,9 +369,11 @@ def predict_log10_eps(
     Served on the driver, like the reference's in-process joblib model:
     the memoized scorer's projection evaluates the target's row in the
     JVM (no plan is analyzed and no Spark job runs per call) and the
-    forest scores the features with one JVM call. ``materials`` is read
-    only when an artifact has to be trained or the scaler computed.
-    Batch scoring stays ``model.transform``.
+    trees read from the saved node table are walked in Python with
+    Spark's own arithmetic. A cold scorer reads the artifact with
+    pyarrow and starts no Spark job; ``materials`` is read only when an
+    artifact has to be trained or the scaler computed. Batch scoring
+    stays ``model.transform``.
     """
     diel = {"electronic": "el", "ionic": "ion", "el": "el", "ion": "ion"}.get(
         dielectric_type
@@ -297,7 +399,7 @@ def predict_log10_eps(
         raise ValueError(
             f"cannot score formula {formula!r}: null/NaN features {', '.join(bad)}"
         )
-    return float(scorer.rf.predict(Vectors.dense(feats)))
+    return _predict(scorer.forest, feats)
 
 
 def _model_path(diel: str, des: str, num_trees: int) -> str:
@@ -315,8 +417,6 @@ def _load_or_compute_scaler(spark: SparkSession, materials: DataFrame, des: str)
     comp_st stats pass re-runs the pairwise site kernel otherwise).
     The load_or_fit policy: a file that is missing, does not parse or
     lacks a feature's stat is recomputed, saved over and returned."""
-    import json
-
     path = _scaler_path(des)
     keys = {f"{c}__{stat}" for c in _features(des) for stat in ("mu", "sd")}
     try:

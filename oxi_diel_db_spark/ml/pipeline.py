@@ -148,7 +148,10 @@ def train(materials: DataFrame, which: str = "el", seed: int = 42) -> tuple[Pipe
 
 def load_or_train(materials: DataFrame, which: str = "el", seed: int = 42) -> tuple[PipelineModel, DataFrame]:
     """train(), except the committed artifact short-circuits the RF fit
-    (load_or_fit: loading is a metadata read, seconds not minutes)."""
+    (load_or_fit). Loading is not a metadata read: ``PipelineModel.load``
+    of a forest pipeline runs nine Spark jobs (the stages' metadata,
+    the node table and the per-tree metadata, rebuilt through a grouped
+    shuffle), seconds in a fresh JVM against minutes for the fit."""
     label = f"label_{which}"
     feats = training_frame(featurize(materials), FEATURES, label)
     path = os.path.join(REPO_MODELS_DIR, f"rf_{which}_seed{seed}")

@@ -307,9 +307,8 @@ def st10_stream_upsert_sink(spark, sf_dir):
         )
 
     table = os.path.join(work, "table")
-    last_per_user(span(0)).write.mode("overwrite").partitionBy(
-        "event_type"
-    ).parquet(table)
+    boot = last_per_user(span(0))
+    boot.write.mode("overwrite").partitionBy("event_type").parquet(table)
 
     stream = ops.replay_stream(spark, [span(i) for i in (1, 2, 3)], work)
 
@@ -324,7 +323,7 @@ def st10_stream_upsert_sink(spark, sf_dir):
         .start()
     )
 
-    back = spark.read.parquet(table)
+    back = ops.read_back(spark, table, boot.schema)
     return back.select(
         "user_id",
         F.col("event_type").alias("last_type"),
@@ -362,7 +361,7 @@ def st11_stream_dq_monitor(spark, sf_dir):
     work = tempfile.mkdtemp(prefix="st11_dq_")
     stream = ops.read_events_stream(spark, sf_dir)
     ops.drain(ops.dq_delta_sink(stream, f"{work}/ledger", f"{work}/ckpt"))
-    ledger = spark.read.parquet(f"{work}/ledger")
+    ledger = ops.read_back(spark, f"{work}/ledger", ops.DQ_LEDGER_SCHEMA)
     return ledger.groupBy("constraint").agg(
         F.sum("n_checked").alias("n_checked"),
         F.sum("n_violations").alias("n_violations"),
@@ -946,9 +945,8 @@ def st21_streaming_ivf_upsert(spark, sf_dir):
     work = tempfile.mkdtemp(prefix="st21_ivf_")
     index_dir = f"{work}/index"
     # bootstrap segment: the one-time batch build, persisted
-    assigned_boot.select("vec_id", "cell", "cv", "cn").write.mode(
-        "overwrite"
-    ).parquet(index_dir)
+    segment = assigned_boot.select("vec_id", "cell", "cv", "cn")
+    segment.write.mode("overwrite").parquet(index_dir)
 
     stream = ops.replay_stream(spark, bands, work)
 
@@ -967,7 +965,7 @@ def st21_streaming_ivf_upsert(spark, sf_dir):
         .start()
     )
 
-    maintained = spark.read.parquet(index_dir)
+    maintained = ops.read_back(spark, index_dir, segment.schema)
     probes = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -1070,6 +1068,8 @@ def st22_streaming_neardup_ingest(spark, sf_dir):
     minhash_signatures(boot).write.mode("overwrite").parquet(store)
     stream = ops.replay_stream(spark, bands, work)
 
+    written = {}  # the schema of the pairs, once a batch has written some
+
     # Append order matters: the batch goes INTO the store FIRST,
     # then pairs batch-vs-store — (store_id < new_id) yields
     # batch-vs-everything-earlier AND within-batch pairs exactly once,
@@ -1089,7 +1089,7 @@ def st22_streaming_neardup_ingest(spark, sf_dir):
             F.col("sig").alias("sig_a"),
             F.posexplode(band_hash_expr()).alias("band", "bh"),
         )
-        (
+        pairs = (
             bb_old.join(bb_new, ["band", "bh"])
             .where(F.col("doc_a") < F.col("doc_b"))
             .select("doc_a", "doc_b", "sig_a", "sig_b")
@@ -1100,9 +1100,9 @@ def st22_streaming_neardup_ingest(spark, sf_dir):
                 F.round(sig_est_jaccard(), 6).alias("est_jaccard"),
             )
             .filter(F.col("est_jaccard") >= 0.25)
-            .write.mode("append")
-            .parquet(result)
         )
+        pairs.write.mode("append").parquet(result)
+        written["pairs"] = pairs.schema
 
     ops.drain(
         stream.writeStream.foreachBatch(ingest_ordered)
@@ -1110,12 +1110,11 @@ def st22_streaming_neardup_ingest(spark, sf_dir):
         .start()
     )
 
-    try:
-        return spark.read.parquet(result)
-    except Exception:  # no pair ever crossed the threshold
+    if "pairs" not in written:  # no batch reached the pair join
         return spark.createDataFrame(
             [], "doc_a bigint, doc_b bigint, est_jaccard double"
         )
+    return ops.read_back(spark, result, written["pairs"])
 
 
 @register(
@@ -1231,7 +1230,8 @@ def st23_streaming_cdc_ingest(spark, sf_dir):
     result = f"{work}/accounting"
     # versioned store: each batch reads the previous version, merges
     # its own compact state, writes the next version and scores against
-    # the read-back of what it WROTE (the persisted-chunk contract)
+    # the read-back of what it WROTE (the persisted-chunk contract); the
+    # first append to the accounting adds that table's schema
     store = {
         "state": ops.write_read_back(
             cdc_chunk_state(cdc_chunks(cdc_fixture_table(boot))),
@@ -1265,7 +1265,7 @@ def st23_streaming_cdc_ingest(spark, sf_dir):
                 F.lit(0),
             ).alias("is_dup"),
         )
-        (
+        accounting = (
             hit.groupBy("doc_id")
             .agg(
                 F.count(F.lit(1)).alias("n_chunks"),
@@ -1282,13 +1282,13 @@ def st23_streaming_cdc_ingest(spark, sf_dir):
                     + F.lit(0.0)
                 ).alias("dup_ratio"),
             )
-            .write.mode("append")
-            .parquet(result)
         )
+        accounting.write.mode("append").parquet(result)
+        store["accounting"] = accounting.schema
 
     ops.drain(
         stream.writeStream.foreachBatch(ingest_ordered)
         .option("checkpointLocation", f"{work}/ckpt")
         .start()
     )
-    return spark.read.parquet(result)
+    return ops.read_back(spark, result, store["accounting"])

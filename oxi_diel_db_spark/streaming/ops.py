@@ -18,6 +18,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from oxi_diel_db_spark.queries._util import cents
 
@@ -387,13 +388,20 @@ def replay_stream(
     )
 
 
+def read_back(spark: SparkSession, path: str, schema: StructType | str) -> DataFrame:
+    """A read of the parquet directory ``path`` that the caller wrote
+    with ``schema``: it runs no footer-inference job, and it has the
+    schema and rows of an inferring read (the reader forces every field
+    nullable and moves partition columns last, as an inferring read
+    does)."""
+    return spark.read.schema(schema).parquet(path)
+
+
 def write_read_back(df: DataFrame, path: str, mode: str = "errorifexists") -> DataFrame:
-    """Write ``df`` as parquet under ``path`` and return a read of that
-    directory that takes ``df``'s own schema, so no footer-inference job
-    reads back what was just written (the reader forces every field
-    nullable, as an inferring read does)."""
+    """Write ``df`` as parquet under ``path`` and return ``read_back`` of
+    that directory with ``df``'s own schema."""
     df.write.mode(mode).parquet(path)
-    return df.sparkSession.read.schema(df.schema).parquet(path)
+    return read_back(df.sparkSession, path, df.schema)
 
 
 def stateful_user_counts(events: DataFrame) -> DataFrame:
@@ -683,6 +691,10 @@ def running_totals_tws(events: DataFrame) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
+
+
+#: The rows ``dq_delta_sink`` writes, one per constraint and batch.
+DQ_LEDGER_SCHEMA = "batch_id int, constraint string, n_checked bigint, n_violations bigint"
 
 
 def dq_delta_sink(events: DataFrame, out_dir: str, ckpt_dir: str):

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Time a named subset of registry queries with the bench.py protocol
-(min-of-N collect, q01 warmup) and print old-vs-new per query against a
-reference bench_runs record. Usage:
+(q01 warmup, then ``bench.min_time``: the WARM_PLAN untimed call and
+the min over $SPARK_GRAFT_BENCH_REPS) and print old-vs-new per query
+against a reference bench_runs record. Usage:
   python scripts/time_subset.py <ref_record.json> <name> [name ...]
 """
 
@@ -10,12 +11,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import bench_reps, min_time  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 
 
 def main() -> None:
@@ -29,12 +30,9 @@ def main() -> None:
     reg = load_registry()
     reg["q01_pricing_summary"].build(spark, SF_DIR).collect()  # warmup
     total_old = total_new = 0.0
+    reps = bench_reps()
     for name in names:
-        best = float("inf")
-        for _ in range(REPS):
-            t0 = time.time()
-            reg[name].build(spark, SF_DIR).collect()
-            best = min(best, time.time() - t0)
+        best = min_time(name, lambda: reg[name].build(spark, SF_DIR).collect(), reps)
         o = old.get(name, float("nan"))
         total_old += o if o == o else 0.0
         total_new += best

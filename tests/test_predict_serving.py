@@ -1,12 +1,17 @@
 """Single-target serving of ``predict_log10_eps``: the driver-side
 scorer must give the batch ``model.transform`` answer bit for bit in
-both ANSI modes, start no Spark job and plan no query once warm, serve
-concurrent callers, refuse formulas it cannot featurize, and reload
-when its session, artifacts or ANSI mode change."""
+both ANSI modes, walk the saved trees exactly as Spark's forest does
+(splits on their thresholds included), start no Spark job when cold
+with the artifacts present and plan no query once warm, refit an
+artifact it cannot read, serve concurrent callers, refuse formulas it
+cannot featurize, and reload when its session, artifacts or ANSI mode
+change."""
 
 from __future__ import annotations
 
+import glob
 import json
+import math
 import os
 import re
 import shutil
@@ -17,6 +22,8 @@ import uuid
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
+from pyspark.ml import PipelineModel
+from pyspark.ml.linalg import Vectors
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -79,21 +86,133 @@ def test_served_value_bit_identical_to_batch_transform(spark, mats, targets, ans
     assert served == expected
 
 
-def test_warm_call_starts_no_spark_job(spark, mats):
+def _threshold_vectors(forest, n):
+    """Vectors that meet split thresholds exactly: for each tree, start
+    from the scaled mean (all zeros) and walk from the root, setting
+    each split's feature, the first time the walk meets it, to the
+    split's threshold (and, in the second vector, one ulp above it)."""
+    out = []
+    for left, right, feature, threshold, _ in forest:
+        for bump in (False, True):
+            x, fixed, i = [0.0] * n, set(), 0
+            while left[i] != -1:
+                f, t = feature[i], threshold[i]
+                if f not in fixed:
+                    x[f] = math.nextafter(t, math.inf) if bump else t
+                    fixed.add(f)
+                i = left[i] if x[f] <= t else right[i]
+            out.append(x)
+    return out
+
+
+@pytest.mark.parametrize("diel,des", CONFIGS)
+def test_tree_walk_matches_spark_on_split_thresholds(spark, mats, diel, des):
+    CM.load_or_train(spark, mats, diel, des, TREES)
+    path = CM._model_path(diel, des, TREES)
+    rf = PipelineModel.load(path).stages[-1]
+    n = len(CM._features(des))
+    forest = CM._read_forest(path, n)
+    vectors = _threshold_vectors(forest, n)
+    walked = [CM._predict(forest, x) for x in vectors]
+    assert walked == [rf.predict(Vectors.dense(x)) for x in vectors]
+
+
+@pytest.mark.parametrize(
+    "edit",
+    [
+        {"numTrees": TREES + 1},
+        {"numFeatures": len(CM.COMP_FEATURES) + 1},
+        {"class": "org.apache.spark.ml.classification.RandomForestClassificationModel"},
+    ],
+    ids=["tree_count", "feature_count", "class"],
+)
+def test_forest_reader_refuses_metadata_it_does_not_match(spark, mats, tmp_path, edit):
+    CM.load_or_train(spark, mats, "el", "comp", TREES)
+    path = str(tmp_path / "model")
+    shutil.copytree(CM._model_path("el", "comp", TREES), path)
+    (meta,) = glob.glob(os.path.join(path, "stages", "1_*", "metadata", "part-*"))
+    with open(meta) as fr:
+        doc = json.loads(fr.readline())
+    with open(meta, "w") as fw:
+        fw.write(json.dumps({**doc, **edit}) + "\n")
+    with pytest.raises(ValueError, match="not a"):
+        CM._read_forest(path, len(CM.COMP_FEATURES))
+
+
+def _jobs_in_group(spark, action):
+    """Spark job ids ``action`` starts, with a control job run after it
+    in the same group so an empty answer means none, not a lost group."""
     sc = spark.sparkContext
-    target = {"formula": "BaTiO3"}
-    CM.predict_log10_eps(spark, mats, target, "el", "comp", TREES)  # warm
     group = f"serving-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "warm predict_log10_eps")
+    sc.setJobGroup(group, "predict_log10_eps")
     try:
-        CM.predict_log10_eps(spark, mats, target, "el", "comp", TREES)
+        action()
         jobs = list(sc.statusTracker().getJobIdsForGroup(group))
         spark.range(3).collect()  # control: the group does see jobs
         control = list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert jobs == []
     assert control
+    return jobs
+
+
+def test_warm_call_starts_no_spark_job(spark, mats):
+    target = {"formula": "BaTiO3"}
+    CM.predict_log10_eps(spark, mats, target, "el", "comp", TREES)  # warm
+    jobs = _jobs_in_group(
+        spark, lambda: CM.predict_log10_eps(spark, mats, target, "el", "comp", TREES)
+    )
+    assert jobs == []
+
+
+def test_cold_scorer_build_starts_no_spark_job(spark, mats, monkeypatch):
+    """With the artifacts on disk, a scorer built from nothing reads the
+    forest's node table without Spark: no ``PipelineModel.load``."""
+    target = {"formula": "BaTiO3"}
+    expected = CM.predict_log10_eps(spark, mats, target, "el", "comp", TREES)
+    monkeypatch.setattr(CM, "_SCORERS", {})
+    served = []
+    jobs = _jobs_in_group(
+        spark,
+        lambda: served.append(CM.predict_log10_eps(spark, mats, target, "el", "comp", TREES)),
+    )
+    assert jobs == []
+    assert served == [expected]
+
+
+def _truncate_part_file(model_dir):
+    (part,) = glob.glob(os.path.join(model_dir, "stages", "1_*", "data", "part-*"))
+    with open(part, "r+b") as fh:
+        fh.truncate(os.path.getsize(part) // 2)
+
+
+def _drop_data_dir(model_dir):
+    (data,) = glob.glob(os.path.join(model_dir, "stages", "1_*", "data"))
+    shutil.rmtree(data)
+
+
+@pytest.mark.parametrize("damage", [_truncate_part_file, _drop_data_dir], ids=["truncated", "no_data"])
+def test_unreadable_forest_is_refit_once_and_served(spark, mats, monkeypatch, tmp_path, damage):
+    monkeypatch.setattr(CM, "MODELS_DIR", str(tmp_path))
+    key = ("el", "comp", 3)
+    target = {"formula": "SrTiO3"}
+    CM.load_or_train(spark, mats, *key)
+    path = CM._model_path(*key)
+    damage(path)
+    monkeypatch.setattr(CM, "_SCORERS", {})  # a fresh process
+    fits = []
+    train = CM.train_model
+
+    def counting_train(*a, **k):
+        fits.append(1)
+        return train(*a, **k)
+
+    monkeypatch.setattr(CM, "train_model", counting_train)
+    served = [CM.predict_log10_eps(spark, mats, target, *key) for _ in range(2)]
+    assert fits == [1]
+    assert CM._read_forest(path, len(CM.COMP_FEATURES))  # saved whole
+    expected = _batch(spark, mats, [target], "comp", PipelineModel.load(path))[0]
+    assert served == [expected, expected]
 
 
 @pytest.mark.parametrize("formula", ["Xx2O3", "", "sio2"])

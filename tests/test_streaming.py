@@ -4,6 +4,8 @@ Streaming contract for event-time windows) + stateful dedup."""
 from __future__ import annotations
 
 import datetime as dt
+import sys
+import uuid
 
 import pytest
 
@@ -495,27 +497,67 @@ def test_write_read_back_takes_the_written_schema_without_a_job(spark, tmp_path,
     inference job reads back the store just written, and the read-back
     has the schema and rows of an inferring parquet read."""
     df = STORES[case](spark).localCheckpoint()
-    sc = spark.sparkContext
-
-    def jobs(name, fn):
-        group = f"readback-{case}-{name}-{tmp_path.name}"
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group)), out
-
-    n_write, _ = jobs("write", lambda: df.write.parquet(str(tmp_path / "plain")))
+    n_write, _ = _jobs(spark, lambda: df.write.parquet(str(tmp_path / "plain")))
     store = str(tmp_path / "store")
-    n_back, back = jobs("back", lambda: ops.write_read_back(df, store))
+    n_back, back = _jobs(spark, lambda: ops.write_read_back(df, store))
     assert n_back == n_write
-    n_append, back = jobs("append", lambda: ops.write_read_back(df, store, "append"))
+    n_append, back = _jobs(spark, lambda: ops.write_read_back(df, store, "append"))
     assert n_append == n_write
     inferred = spark.read.parquet(store)
     assert back.schema == inferred.schema
     assert sorted(back.collect()) == sorted(inferred.collect())
     assert back.count() == 2 * df.count() > 0
+
+
+#: the queries that end with a read of a directory they wrote themselves
+READ_BACKS = [
+    "st10_stream_upsert_sink",
+    "st11_stream_dq_monitor",
+    "st21_streaming_ivf_upsert",
+    "st22_streaming_neardup_ingest",
+    "st23_streaming_cdc_ingest",
+]
+
+
+def _jobs(spark, action):
+    """(number of Spark jobs ``action`` starts on this thread, its result)."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    group = f"readback-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+@pytest.mark.parametrize("name", READ_BACKS)
+def test_end_of_query_read_back_runs_no_inference_job(spark, monkeypatch, name):
+    """The query's final read takes the schema it wrote: it runs no job
+    where a plain read of the same directory runs its footer-inference
+    job (so the build runs one job fewer), and it has the schema and
+    rows of that plain read."""
+    from oxi_diel_db_spark.queries import load_registry
+
+    read_back = ops.read_back
+    reads = []
+
+    def spy(spark_, path, schema):
+        if sys._getframe(1).f_code is ops.write_read_back.__code__:  # a store read
+            return read_back(spark_, path, schema)
+        n, df = _jobs(spark_, lambda: read_back(spark_, path, schema))
+        reads.append((path, n, df))
+        return df
+
+    monkeypatch.setattr(ops, "read_back", spy)
+    load_registry()[name].build(spark, SF)
+    ((path, n_back, back),) = reads
+    n_plain, plain = _jobs(spark, lambda: spark.read.parquet(path))
+    assert (n_back, n_plain) == (0, 1)
+    assert back.schema == plain.schema
+    assert sorted(back.collect()) == sorted(plain.collect())
+    assert back.count() > 0
 
 
 def test_split_arrivals_bootstrap_half_and_four_bands(spark):

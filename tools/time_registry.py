@@ -1,6 +1,8 @@
 #!/usr/bin/env python
-"""Time EVERY registry query once (cold, single-shot) at the given SF
-dir — the full-surface regression net behind the headline bench.
+"""Time EVERY registry query once (single-shot: ``bench.min_time`` with
+reps=1, so a WARM_PLAN entry gets its untimed call first, as in
+bench.py) at the given SF dir — the full-surface regression net behind
+the headline bench.
 Prints one line per query sorted by runtime plus a total; slow lines
 are expected only for ML training, streaming trigger fixed costs,
 file-IO round-trips, and iterative graph loops (see NOTES/SCALE.md).
@@ -10,10 +12,13 @@ Usage: python tools/time_registry.py [sf_dir] [name_prefix ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import min_time  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 PREFIXES = tuple(sys.argv[2:])
@@ -32,8 +37,7 @@ def main() -> None:
             continue
         t0 = time.time()
         try:
-            qdef.build(spark, SF_DIR).collect()
-            timings[name] = time.time() - t0
+            timings[name] = min_time(name, lambda: qdef.build(spark, SF_DIR).collect(), 1)
         except Exception as ex:  # keep sweeping; report at the end
             failures[name] = str(ex).split("\n")[0][:160]
         sys.stderr.write(f"  {name}: {time.time() - t0:.1f}s\n")
