@@ -30,15 +30,6 @@ def mean3(arr: Column) -> Column:
     ) / 3.0
 
 
-def trace3(mat: Column) -> Column:
-    """trace of a 3×3 tensor stored as array<array<double>>."""
-    return (
-        F.element_at(F.element_at(mat, 1), 1)
-        + F.element_at(F.element_at(mat, 2), 2)
-        + F.element_at(F.element_at(mat, 3), 3)
-    )
-
-
 def avg_abs_trace3(tensors: Column) -> Column:
     """Invariant 4 (reference README.md:38 semantics, verified with the
     empirical /3): mean over site tensors of |trace(T)/3|."""

@@ -4,26 +4,18 @@ parse_formula reimplements the semantics the reference gets from
 pymatgen's ``Composition("SiO2")`` (reference main.py:33) as pure
 Catalyst expressions — regexp token split, no Python. The
 electronegativity-ordered formula (O1: reference README.md:18, cations
-ordered by EN) uses a broadcast element-property lookup, which is also
-the engine's pattern for every composition-level featurizer (§2.9).
+ordered by EN) looks the elements up in a literal element-property map.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # element token: capital + optional lowercase + optional count (int/float)
 _TOKEN_RE = "[A-Z][a-z]?[0-9.]*"
 # depth-1 parenthesized group with optional multiplier: '(SiO4)2'
 _GROUP_RE = r"\([^()]*\)[0-9.]*"
-
-
-def formula_tokens(formula: Column | str) -> Column:
-    """Raw element tokens of a PAREN-FREE formula string. Kept for token
-    counting; composition math must use formula_pairs (group-aware)."""
-    c = F.col(formula) if isinstance(formula, str) else formula
-    return F.regexp_extract_all(c, F.lit(_TOKEN_RE), 0)
 
 
 def _token_pairs(s: Column) -> Column:
@@ -189,14 +181,6 @@ PAULING_EN = {
     "Au": 2.54, "Hg": 2.00, "Tl": 1.62, "Pb": 2.33, "Bi": 2.02, "Th": 1.30,
     "U": 1.38,
 }
-
-
-def element_property_table(spark: SparkSession) -> DataFrame:
-    """Broadcast element-property dim table — the engine's replacement
-    for matminer's elemental lookups (§2.9 'composition-level →
-    broadcast element-property table')."""
-    rows = [(el, en) for el, en in sorted(PAULING_EN.items())]
-    return spark.createDataFrame(rows, "element string, electronegativity double")
 
 
 def en_ordered_formula(elements_col: Column | str) -> Column:

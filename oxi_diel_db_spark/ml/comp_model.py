@@ -245,24 +245,37 @@ class _Scorer(NamedTuple):
 
 
 #: (diel, des, num_trees) → scorer. An entry is rebuilt when its stamp —
-#: the SparkContext, the model directory's and scaler file's mtimes and
-#: the ANSI mode (the resolved casts and divisions carry their eval
-#: mode) — no longer matches, so a restarted session, a rewritten
-#: artifact or a flipped mode is never served from a stale projection.
+#: the SparkContext, the files the forest reader reads, the scaler
+#: file's mtime and the ANSI mode (the resolved casts and divisions
+#: carry their eval mode) — no longer matches, so a restarted session, a
+#: rewritten artifact or a flipped mode is never served from a stale
+#: projection.
 _SCORERS: dict[tuple[str, str, int], _Scorer] = {}
 
 
 def _stamp(spark: SparkSession, diel: str, des: str, num_trees: int) -> tuple:
-    def mtime(path: str) -> int | None:
-        try:
-            return os.stat(path).st_mtime_ns
-        except OSError:
-            return None
-
+    """The scorer's stamp. The model is stamped by ``(relative path,
+    st_size, st_mtime_ns)`` of the files :func:`_read_forest` reads (the
+    forest stage's metadata part file and its node-table files), not by
+    the model directory's own mtime, which an in-place rewrite of a part
+    file leaves unchanged."""
+    model = _model_path(diel, des, num_trees)
+    files = []
+    for pattern in ("stages/1_*/metadata/part-*", "stages/1_*/data/*"):
+        for path in sorted(glob.glob(os.path.join(model, pattern))):
+            try:
+                st = os.stat(path)
+            except OSError:
+                continue
+            files.append((os.path.relpath(path, model), st.st_size, st.st_mtime_ns))
+    try:
+        scaler = os.stat(_scaler_path(des)).st_mtime_ns
+    except OSError:
+        scaler = None
     return (
         spark.sparkContext,
-        mtime(_model_path(diel, des, num_trees)),
-        mtime(_scaler_path(des)),
+        tuple(files),
+        scaler,
         spark.conf.get("spark.sql.ansi.enabled"),
     )
 

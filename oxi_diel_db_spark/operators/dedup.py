@@ -474,19 +474,24 @@ def embedding_neardup_pairs_blocked(
     )
 
 
-def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
+def _driver_union_find(spark, rows, src_type: str) -> DataFrame:
     """Small-graph fast path for dedup_clusters: min-label union-find on
-    the driver. The NEAR-DUP PAIR graph is a contraction of the corpus —
-    at sf0.1 it is ~500 nodes while the corpus is 50k docs — and running
-    O(log d) distributed rounds (~3 jobs/round of 32-task stages) over a
-    few hundred rows is pure scheduler overhead (measured 1.9 s vs
-    ~0.1 s here). The collect is BOUNDED by the caller's explicit
-    ``small_graph_max_edges`` check against the already-materialized
-    edge list; above the bound the distributed loop runs instead — the
-    same adaptive small-input contraction AQE applies to joins.
+    the driver over the collected raw ``(src, dst)`` pair rows. The
+    NEAR-DUP PAIR graph is a contraction of the corpus — at sf0.1 it is
+    ~500 nodes while the corpus is 50k docs — and running O(log d)
+    distributed rounds (~3 jobs/round of 32-task stages) over a few
+    hundred rows is pure scheduler overhead (measured 1.9 s vs ~0.1 s
+    here). The rows need no symmetrizing or distinct: a duplicate, a
+    reversed pair or a self-loop leaves the union-find unchanged.
     Identical fixpoint: path-compressed union by min root == min label
-    propagation (each component's label is its minimum node id)."""
-    src_type = dict(edges.dtypes)["src"]
+    propagation (each component's label is its minimum node id).
+
+    The labels come back as a ``LocalRelation`` (built from a pyarrow
+    Table): its size is known to the optimizer, so every caller's join
+    against the cluster table can broadcast it instead of sort-merge
+    joining an RDD of unknown size."""
+    import pyarrow as pa
+
     parent: dict = {}
 
     def find(x):
@@ -497,8 +502,7 @@ def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for row in edges.collect():
-        a, b = row.src, row.dst
+    for a, b in rows:
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -507,14 +511,9 @@ def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    rows = [(n, find(n)) for n in parent]
-    schema = f"doc_id {src_type}, cluster_id {src_type}"
-    if not rows:
-        return spark.createDataFrame([], schema)
-    # bounded slices: default parallelism would scatter a few hundred
-    # labels over 32 one-row tasks — pure scheduling cost downstream
-    rdd = spark.sparkContext.parallelize(rows, max(1, len(rows) // 50_000))
-    return spark.createDataFrame(rdd, schema)
+    nodes = list(parent)
+    table = pa.table({"doc_id": nodes, "cluster_id": [find(n) for n in nodes]})
+    return spark.createDataFrame(table, f"doc_id {src_type}, cluster_id {src_type}")
 
 
 def dedup_clusters(
@@ -542,34 +541,46 @@ def dedup_clusters(
     (returning partially-converged labels would silently split clusters
     and under-delete — ADVICE r1).
 
-    Adaptive: when the materialized edge list is at most
-    ``small_graph_max_edges`` rows (the count is free — the list is
-    checkpointed anyway), clustering runs as a driver-side min-label
-    union-find instead (see _driver_union_find) — the pair graph is a
-    contraction of the corpus and at test scales the distributed loop
-    is pure fixed cost. At 100 TB pair counts can reach billions; then
-    the bound fails and the O(log diameter) distributed loop below runs,
-    with a FRONTIER optimization: a round's neighbor-min join only
-    reads edges whose dst changed in the previous round (labels are
-    monotone non-increasing, so unchanged neighbors can contribute
-    nothing new), which drops fully-converged components out of the
-    join entirely.
+    Adaptive: the raw ``(a, b)`` pairs are materialized once, and the
+    driver collects at most ``small_graph_max_edges + 1`` of them — the
+    bound counts those raw rows (duplicates and both orientations
+    included), not symmetrized distinct edges. At most
+    ``small_graph_max_edges`` rows means clustering runs as a
+    driver-side min-label union-find on the collected rows (see
+    _driver_union_find) — the pair graph is a contraction of the corpus
+    and at test scales the distributed loop is pure fixed cost. At
+    100 TB pair counts can reach billions; then the bound fails, the
+    materialized pairs are symmetrized and distinct-ed (the pair
+    pipeline does not run again) and the O(log diameter) distributed
+    loop below runs, with a FRONTIER optimization: a round's
+    neighbor-min join only reads edges whose dst changed in the previous
+    round (labels are monotone non-increasing, so unchanged neighbors
+    can contribute nothing new), which drops fully-converged components
+    out of the join entirely. ``small_graph_max_edges=0`` forces the
+    distributed loop on any non-empty input.
     """
-    edges = (
+    raw = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
-        .distinct()
-        # materialize ONCE: every iteration joins edges, and without
-        # this each round replays the whole upstream pair-generation
-        # pipeline (for LSH input: shingle → minhash → banded join —
-        # measured 12 s vs 4 s for d8 at sf0.1). Same reliable-
-        # checkpoint() swap note as graph.py applies on a real cluster.
+        # materialize ONCE: both paths read the pairs from here, and
+        # without it the distributed loop replays the whole upstream
+        # pair-generation pipeline every round (for LSH input: shingle
+        # → minhash → banded join — measured 12 s vs 4 s for d8 at
+        # sf0.1). Same reliable-checkpoint() swap note as graph.py
+        # applies on a real cluster.
         .localCheckpoint(eager=True)
     )
-    if edges.count() <= small_graph_max_edges:
-        return _driver_union_find(pairs.sparkSession, edges)
+    # one bounded collect decides the path AND feeds the fast path —
+    # no count() probe over the pairs
+    rows = raw.limit(small_graph_max_edges + 1).collect()
+    if len(rows) <= small_graph_max_edges:
+        return _driver_union_find(pairs.sparkSession, rows, dict(raw.dtypes)["src"])
+    edges = (
+        raw.unionByName(
+            raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        .distinct()
+        .localCheckpoint(eager=True)  # every round joins the edge list
+    )
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()

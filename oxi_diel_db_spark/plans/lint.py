@@ -154,13 +154,6 @@ def _n_entries(bracket_body: str) -> int:
     return n
 
 
-def lint_report(df: DataFrame, max_exchanges: int = 6) -> str:
-    """Human-readable lint summary (empty string = clean)."""
-    return "\n".join(
-        f"[{sev.upper():5s}] {code}: {msg}" for code, sev, msg in lint(df, max_exchanges)
-    )
-
-
 def global_window_input_rows(df: DataFrame) -> list[int | None]:
     """Row counts entering each GLOBAL (unpartitioned) window of an
     ALREADY-EXECUTED DataFrame — the runtime enforcement for the

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -1601,24 +1602,25 @@ def q100_grouped_agg_udaf(spark, sf_dir):
     crosses the shuffle), which is why the built-in expression form is
     preferred at 100 TB and this entry exists as API-surface coverage
     with a 4-dp round absorbing pandas' different summation order."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # explicit functionType: the module's `from __future__ import
-    # annotations` stringifies type hints, so the inferred-signature
-    # form cannot see pd.Series -> float
-    def _geo_mean(v):
+    # type-hinted GROUPED_AGG (Series -> scalar): the hints are strings
+    # under the module's `from __future__ import annotations`, and
+    # pandas_udf resolves them with get_type_hints against the module
+    # globals, where `pd` is imported
+    def _geo_mean(v: pd.Series) -> float:
         import numpy as np
 
         return float(np.exp(np.log(v.to_numpy()).mean()))
 
-    geo_mean = pandas_udf(_geo_mean, "double", PandasUDFType.GROUPED_AGG)
+    geo_mean = pandas_udf(_geo_mean, "double")
 
-    def _n(v):
+    def _n(v: pd.Series) -> int:
         return len(v)
 
     # GROUPED_AGG UDAFs cannot mix with JVM aggregates in one agg()
     # (INVALID_PANDAS_UDF_PLACEMENT) — so the count is a UDAF too
-    n_udaf = pandas_udf(_n, "long", PandasUDFType.GROUPED_AGG)
+    n_udaf = pandas_udf(_n, "long")
 
     l = t(spark, sf_dir, "lineitem").filter(
         (F.col("l_extendedprice") > 0) & (F.col("l_quantity") > 0)
@@ -1918,7 +1920,6 @@ def ml14_pca_covariance(spark, sf_dir):
     below the step). Upper triangle only (i <= j): 2,080 gate rows at
     d=64."""
     import numpy as np
-    import pandas as pd
 
     from oxi_diel_db_spark.functions.vectors import as_double
 

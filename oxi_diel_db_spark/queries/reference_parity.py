@@ -1106,16 +1106,6 @@ _LPD_ION_PROPS = {
 }
 
 
-def _cn_affinity(cn_col, k: float):
-    c = cn_col.cast("double") - F.lit(k)
-    return F.exp(-(c * c) / F.lit(2.0))
-
-
-def _sql_cn_affinity(cn: str, k: float) -> str:
-    c = f"(CAST({cn} AS DOUBLE) - {k!r})"
-    return f"exp(-({c} * {c}) / 2.0)"
-
-
 def ion_comp_st_descriptors(spark, mats=None) -> "F.DataFrame":
     """(mp_id, formula, <45 descriptor columns>) — ml13 trains on this.
     Same plan family as ml10: one compositional projection + the site

@@ -207,10 +207,6 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {t: load(spark, t, sf_dir) for t in TABLE_NAMES}
-
-
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
     """Register every table as a temp view so the SQL surface works."""
     for t in TABLE_NAMES:

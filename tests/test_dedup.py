@@ -223,6 +223,100 @@ def test_dedup_clusters_fast_path_matches_distributed(spark):
     assert got[201] == 200 and all(got[x] == 300 for x in (300, 301, 302, 303))
 
 
+def _optimized_root(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().nodeName()
+
+
+def test_dedup_clusters_small_path_one_bounded_collect(spark, monkeypatch):
+    """The small-graph path materializes the raw pairs once and decides
+    the path from one bounded collect: count() is never called, nothing
+    it materializes or collects symmetrizes the pairs (no Union), and
+    the cluster table is a LocalRelation, so callers can broadcast it."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans = []
+
+    def recording(meth):
+        orig = getattr(DataFrame, meth)
+
+        def wrapped(self, *args, **kwargs):
+            plans.append(self._jdf.queryExecution().analyzed().toString())
+            return orig(self, *args, **kwargs)
+
+        return wrapped
+
+    def no_count(self):
+        raise AssertionError("count() called on the small-graph path")
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
+    )
+    monkeypatch.setattr(DataFrame, "count", no_count)
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording("localCheckpoint"))
+    monkeypatch.setattr(DataFrame, "collect", recording("collect"))
+    labels = dedup.dedup_clusters(pairs)
+    monkeypatch.undo()
+    assert len(plans) == 2  # one materialization, one collect
+    assert not [p for p in plans if "Union" in p]
+    assert _optimized_root(labels) == "LocalRelation"
+    got = {r.doc_id: r.cluster_id for r in labels.collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+
+
+def test_dedup_clusters_bound_counts_raw_pairs(spark, monkeypatch):
+    """small_graph_max_edges bounds the raw pair rows the driver
+    collects: exactly that many rows take the driver path, one more
+    takes the distributed loop, and both label duplicate, reversed and
+    self-loop pairs alike. The raw rows (12) outnumber the symmetrized
+    distinct edges (10), so a bound on edges would pick the other path."""
+    raw = [
+        (1, 2), (1, 2), (1, 2), (1, 2), (2, 1),  # duplicates, a reversed pair
+        (3, 3), (3, 4),                          # self-loop inside a component
+        (5, 6), (7, 7), (7, 7), (7, 7),          # an isolated self-loop, 3 times
+        (4, 8),
+    ]
+    pairs = spark.createDataFrame(raw, "doc_a long, doc_b long")
+    calls = []
+    orig = dedup._driver_union_find
+
+    def spy(*args):
+        calls.append(len(args[1]))
+        return orig(*args)
+
+    monkeypatch.setattr(dedup, "_driver_union_find", spy)
+    driver = dedup.dedup_clusters(pairs, small_graph_max_edges=len(raw))
+    assert calls == [len(raw)]
+    assert _optimized_root(driver) == "LocalRelation"
+    dist = dedup.dedup_clusters(pairs, small_graph_max_edges=len(raw) - 1)
+    assert calls == [len(raw)]  # the driver path was not taken again
+    assert _optimized_root(dist) != "LocalRelation"
+    want = {1: 1, 2: 1, 3: 3, 4: 3, 8: 3, 5: 5, 6: 5, 7: 7}
+    assert {r.doc_id: r.cluster_id for r in driver.collect()} == want
+    assert {r.doc_id: r.cluster_id for r in dist.collect()} == want
+
+
+def test_dedup_clusters_runs_pair_pipeline_once_above_bound(spark):
+    """Above the bound the edge list is symmetrized from the already
+    materialized pairs: a Python UDF in the pair pipeline sees each
+    input row exactly once, on either path."""
+    from pyspark.sql.functions import udf
+
+    rows = [(i, i + 1) for i in range(0, 40, 2)]
+    for bound in (len(rows), 0):
+        seen = spark.sparkContext.accumulator(0)
+
+        def ident(x, seen=seen):
+            seen.add(1)
+            return x
+
+        pairs = spark.createDataFrame(rows, "doc_a long, doc_b long").select(
+            udf(ident, "long")("doc_a").alias("doc_a"), "doc_b"
+        )
+        labels = dedup.dedup_clusters(pairs, small_graph_max_edges=bound)
+        assert labels.count() == 2 * len(rows)
+        assert seen.value == len(rows), bound
+
+
 def test_ngram_decontaminate_counts_and_ratio(spark):
     from oxi_diel_db_spark.operators import dedup
 

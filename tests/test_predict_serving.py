@@ -215,6 +215,35 @@ def test_unreadable_forest_is_refit_once_and_served(spark, mats, monkeypatch, tm
     assert served == [expected, expected]
 
 
+def test_in_place_part_file_edit_is_not_served_from_the_memo(spark, mats, monkeypatch, tmp_path):
+    """A node-table part file truncated in place leaves the model
+    directory's own mtime alone; the live scorer must still notice it
+    and refit rather than serve the forest it read before."""
+    monkeypatch.setattr(CM, "MODELS_DIR", str(tmp_path))
+    monkeypatch.setattr(CM, "_SCORERS", {})
+    key = ("el", "comp", 3)
+    target = {"formula": "SrTiO3"}
+    v1 = CM.predict_log10_eps(spark, mats, target, *key)
+    first = CM._SCORERS[key]
+    path = CM._model_path(*key)
+    dir_mtime = os.stat(path).st_mtime_ns
+    _truncate_part_file(path)
+    assert os.stat(path).st_mtime_ns == dir_mtime
+    fits = []
+    train = CM.train_model
+
+    def counting_train(*a, **k):
+        fits.append(1)
+        return train(*a, **k)
+
+    monkeypatch.setattr(CM, "train_model", counting_train)
+    v2 = CM.predict_log10_eps(spark, mats, target, *key)
+    assert fits == [1]
+    assert CM._SCORERS[key] is not first
+    assert CM._read_forest(path, len(CM.COMP_FEATURES))  # saved whole
+    assert v2 == _batch(spark, mats, [target], "comp", PipelineModel.load(path))[0] == v1
+
+
 @pytest.mark.parametrize("formula", ["Xx2O3", "", "sio2"])
 def test_unscorable_formula_raises_value_error(spark, mats, ansi, formula):
     with pytest.raises(ValueError, match=f"formula {re.escape(repr(formula))}"):
